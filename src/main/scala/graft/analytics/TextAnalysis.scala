@@ -57,8 +57,9 @@ object TextAnalysis {
     val ent4 = regexp_replace(ent3, "&quot;", "\"")
     val ent5 = regexp_replace(ent4, "&#39;", "'")
     val ent6 = regexp_replace(ent5, "&amp;", "&")
-    trim(regexp_replace(regexp_replace(ent6, "[ \\t\\r]+", " "),
-      "\\s*\\n\\s*", "\n"))
+    // strip edge whitespace, newlines too (`trim` removes spaces only)
+    regexp_replace(regexp_replace(regexp_replace(ent6, "[ \\t\\r]+", " "),
+      "\\s*\\n\\s*", "\n"), "^\\s+|\\s+$", "")
   }
 
   /**

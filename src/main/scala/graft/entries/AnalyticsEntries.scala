@@ -1369,7 +1369,8 @@ private[graft] object AnalyticsEntries {
         | e11 AS (SELECT side, doc_id, regexp_replace(t, '&amp;', '&', 'g') AS t FROM e10),
         | e12 AS (SELECT side, doc_id, regexp_replace(t, '[ \t\r]+', ' ', 'g') AS t FROM e11),
         | extr AS (SELECT side, doc_id,
-        |    trim(regexp_replace(t, '\s*\n\s*', chr(10), 'g')) AS text FROM e12),
+        |    regexp_replace(regexp_replace(t, '\s*\n\s*', chr(10), 'g'),
+        |      '^\s+|\s+$', '', 'g') AS text FROM e12),
         | gates AS (
         |  SELECT r.side, r.doc_id,
         |    (regexp_replace(regexp_replace(regexp_replace(lower(regexp_extract(
@@ -3034,7 +3035,8 @@ private[graft] object AnalyticsEntries {
         | c11 AS (SELECT doc_id, regexp_replace(t, '&amp;', '&', 'g') AS t FROM c10),
         | c12 AS (SELECT doc_id, regexp_replace(t, '[ \t\r]+', ' ', 'g') AS t FROM c11),
         | chain AS (SELECT doc_id,
-        |    trim(regexp_replace(t, '\s*\n\s*', chr(10), 'g')) AS ext FROM c12)
+        |    regexp_replace(regexp_replace(t, '\s*\n\s*', chr(10), 'g'),
+        |      '^\s+|\s+$', '', 'g') AS ext FROM c12)
         |SELECT doc_id, md5(ext) AS text_md5,
         |  CAST(length(ext) AS INTEGER) AS n_chars,
         |  CAST(len(string_split(ext, chr(10))) AS INTEGER) AS n_lines

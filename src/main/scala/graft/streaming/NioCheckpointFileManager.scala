@@ -53,6 +53,10 @@ class NioCheckpointFileManager(base: Path, conf: Configuration)
 
   private def nio(p: Path): JPath = Paths.get(p.toUri.getPath)
 
+  /** The atomic no-overwrite publish: link(2) creates `link` or fails. */
+  private[streaming] def createLink(link: JPath, target: JPath): Unit =
+    Files.createLink(link, target)
+
   override def createAtomic(path: Path,
       overwriteIfPossible: Boolean): CancellableFSDataOutputStream = {
     if (delegate != null) return delegate.createAtomic(path, overwriteIfPossible)
@@ -80,14 +84,16 @@ class NioCheckpointFileManager(base: Path, conf: Configuration)
           // rename(2) always replaces); link(2) is an atomic
           // create-or-EEXIST, so the hard-link publish either commits tmp
           // as dst or fails atomically with no window.
-          try Files.createLink(dst, tmp)
+          try createLink(dst, tmp)
           catch {
             case _: java.nio.file.FileAlreadyExistsException =>
               Files.deleteIfExists(tmp)
               throw new org.apache.hadoop.fs.FileAlreadyExistsException(
                 s"rename destination already exists: $dst")
-            case _: UnsupportedOperationException =>
-              // file:-scheme mount without hard links (vfat/FUSE-class):
+            case _: UnsupportedOperationException | _: java.nio.file.FileSystemException =>
+              // file:-scheme mount without hard links (vfat/FUSE-class;
+              // some refuse link(2) with EPERM, a FileSystemException —
+              // this case must stay after its FileAlreadyExists subclass):
               // fall back to check-then-rename — the same (non-atomic)
               // existence contract the default manager provides
               if (Files.exists(dst)) {

@@ -61,6 +61,19 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("SortMergeJoin"), p)
   }
 
+  test("wire ingest is one window over batch rows: one Exchange, no join or union, one decode") {
+    import graft.functions.RecordBatchCodec
+    // an RDD source: a local relation would fold the decode at planning time
+    val wires = spark.sparkContext.parallelize((0L until 8L).map { a =>
+      val recs = (0 until 3).map(d => RecordBatchCodec.Rec(d, 0L, null, Array[Byte](1), Nil))
+      ((a % 2).toInt, a, RecordBatchCodec.encode(0L, 0, 0.toShort, 0L, 0L, -1L, 0.toShort, 0, recs))
+    }, 2).toDF("partition", "arrival", "wire")
+    val p = plan(RecordLog.wireIngest(wires, col("wire"), col("partition"), col("arrival")))
+    assert("Exchange".r.findAllIn(p).size == 1, p)
+    assert(!p.contains("Join") && !p.contains("BroadcastExchange") && !p.contains("Union"), p)
+    assert("kafka_batch_decode".r.findAllIn(p).size == 1, p)
+  }
+
   test("datalake readTable prunes snapshot directories at planning time — no join") {
     val out = java.nio.file.Files.createTempDirectory("plan_dl").toString
     val ev = (0L until 100L).map(i => (i, new java.sql.Timestamp(86400000L * (i % 3))))

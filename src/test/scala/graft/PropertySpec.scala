@@ -40,6 +40,64 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("wire ingest equals a per-batch codec model: codecs, rejects, gapped deltas, shuffled arrivals") {
+    import graft.functions.RecordBatchCodec
+    import graft.functions.RecordBatchCodec.Rec
+    val rnd = new Random(2024)
+    for (_ <- 1 to 3) {
+      // (partition, arrival, wire); partition 3 carries only rejected batches
+      val wires = (0 until 4).flatMap { p =>
+        rnd.shuffle((0 until 9).toList).take(6 + rnd.nextInt(3)).map(_ * 10L + rnd.nextInt(10))
+          .zipWithIndex.map { case (arr, b) =>
+            val n = if (b == 2) 0 else 1 + rnd.nextInt(6) // one batch of 0 records
+            val step = 1 + rnd.nextInt(3) // > 1: gapped deltas, shuffled in the batch
+            val deltas = rnd.shuffle((0 until n).map(_ * step).toList)
+            val recs = deltas.map(d => Rec(d, d.toLong, s"k$p-$arr-$d".getBytes("UTF-8"),
+              s"v${rnd.nextInt(1000)}".getBytes("UTF-8"), Nil))
+            val w = RecordBatchCodec.encode(0L, 0, 0.toShort, 0L, 0L, -1L, 0.toShort, 0,
+              recs, codec = rnd.nextInt(5)) // none, gzip, snappy, lz4, zstd
+            val fate = if (p == 3) 1 + b % 3 else rnd.nextInt(8)
+            val bad = fate match {
+              case 1 => // one flipped byte in the CRC-covered header fields
+                val i = RecordBatchCodec.CrcDataStart + rnd.nextInt(40)
+                w.updated(i, (w(i) ^ 0x40).toByte)
+              case 2 => w.take(40)                           // short of the header
+              case 3 => w.take(RecordBatchCodec.HeaderSize + 1) // header parses, CRC fails
+              case _ => w
+            }
+            (p, arr, bad)
+          }
+      }
+      // the model: size gate, CRC gate, then base + rank of offset_delta
+      val model = wires.groupBy(_._1).toSeq.flatMap { case (p, bs) =>
+        var base = 0L
+        bs.sortBy(_._2).flatMap { case (_, arr, w) =>
+          if (w.length < RecordBatchCodec.HeaderSize || !RecordBatchCodec.crcValid(w))
+            Seq((if (w.length < RecordBatchCodec.HeaderSize) "malformed" else "crc_reject",
+              p, -1L, arr.toString, null: String))
+          else {
+            val recs = RecordBatchCodec.decodeRecords(RecordBatchCodec.recordsRegion(w),
+              RecordBatchCodec.decodeHeader(w).recordCount).sortBy(_.offsetDelta)
+            val out = recs.zipWithIndex.map { case (r, i) =>
+              ("accept", p, base + i, new String(r.key, "UTF-8"), new String(r.value, "UTF-8"))
+            }
+            base += recs.size
+            out
+          }
+        }
+      }
+      assert(model.exists(_._1 == "malformed") && model.exists(_._1 == "crc_reject"))
+      val got = RecordLog.wireIngest(rnd.shuffle(wires).toDF("partition", "arrival", "wire")
+          .repartition(3), col("wire"), col("partition"), col("arrival"))
+        .select(col("route"), col("partition"), col("offset"),
+          col("key").cast("string"), col("value").cast("string"))
+        .as[(String, Int, Long, String, String)].collect()
+      val order = (r: (String, Int, Long, String, String)) => (r._1, r._2, r._3, r._4)
+      assert(got.toSeq.sortBy(order) === model.sortBy(order))
+      assert(!got.exists(r => r._2 == 3 && r._1 == "accept"))
+    }
+  }
+
   test("compaction: exactly one survivor per key and it is the max-offset record") {
     val rnd = new Random(7)
     val rows = (0 until 500).map { i =>

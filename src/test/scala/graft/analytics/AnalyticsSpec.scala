@@ -68,6 +68,17 @@ class AnalyticsSpec extends SparkSpec {
     assert(got.split("\n").toSeq === Seq("Tom & Jerry <3", "Second block", "item one"))
   }
 
+  test("extracted text has no edge newline: a 19-word page counts 19 tokens") {
+    val words = (1 to 19).map(i => s"w$i").mkString(" ")
+    val got = Seq(s"<html><body><p>$words</p></body></html>").toDF("html")
+      .select(TextAnalysis.htmlToText(col("html")).as("t"))
+      .select(col("t"), TextAnalysis.tokenCount(col("t")),
+        size(Dedup.shingles(col("t"), 3)))
+      .as[(String, Int, Int)].head()
+    // 19 < 20: the crawl quality gate (tokenCount < minTokens) rejects it
+    assert(got === ((words, 19, 17)))
+  }
+
   test("url blocklist: domain label boundary, subdomains, path keywords") {
     val urls = Seq(
       (0L, "https://evil.example/home"),          // exact domain
@@ -265,7 +276,8 @@ class AnalyticsSpec extends SparkSpec {
     val b1 = Seq(
       (300L, "https://news.example/b", page("zebras gallop across wide open savannah plains now")),
       (301L, "https://news.example/c", page("too short")),
-      (302L, "https://news.example/d", page("completely different words entirely unrelated text here now yes")))
+      (302L, "https://news.example/d", page("completely different words entirely unrelated text here now yes")),
+      (303L, "https://news.example/e", page("one below gate"))) // minTokens - 1 words
       .toDF("doc_id", "url", "html")
     val in = Files.createDirectory(Paths.get(s"$root/in"))
     Seq((b0, "b0", 1700000000000L), (b1, "b1", 1700000001000L)).foreach {
@@ -291,11 +303,12 @@ class AnalyticsSpec extends SparkSpec {
     assert(got(201L) === (("blocked_url", None)))
     assert(got(300L) === (("dup_corpus", Some(200L))))
     assert(got(301L) === (("low_quality", None)))
+    assert(got(303L) === (("low_quality", None)))
     // 302 matches corpus doc 2's words closely BUT doc 2 is IN the
     // initial corpus, so it's dup_corpus of 2 — while nothing matches
     // the blocked 201 (which never entered the index)
     assert(got(302L) === (("dup_corpus", Some(2L))))
-    assert(got.size === 5)
+    assert(got.size === 6)
   }
 
   test("ngram jaccard exact pairs") {

@@ -1,6 +1,8 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, FileSystemException, Path => JPath}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileAlreadyExistsException, Path}
@@ -26,6 +28,12 @@ class NioCheckpointFileManagerSpec extends AnyFunSuite {
 
   private def read(p: java.nio.file.Path): String =
     new String(Files.readAllBytes(p), "UTF-8")
+
+  private def names(dir: JPath): List[String] = {
+    val entries = Files.list(dir)
+    try entries.iterator().asScala.map(_.getFileName.toString).toList
+    finally entries.close()
+  }
 
   test("overwriteIfPossible=true replaces an existing destination") {
     val dir = Files.createTempDirectory("nio_ckpt_spec")
@@ -67,10 +75,25 @@ class NioCheckpointFileManagerSpec extends AnyFunSuite {
     val cancelled = m.createAtomic(dst, overwriteIfPossible = true)
     cancelled.write("d".getBytes("UTF-8"))
     cancelled.cancel()
-    val leftovers = Files.list(dir).iterator()
-    var names = List.empty[String]
-    while (leftovers.hasNext) names ::= leftovers.next().getFileName.toString
-    assert(names == List("commit-log"), s"unexpected leftovers: $names")
+    assert(names(dir) == List("commit-log"), s"unexpected leftovers: ${names(dir)}")
     assert(read(dir.resolve("commit-log")) == "c")
+  }
+
+  test("a mount that refuses link(2) with a FileSystemException falls back to " +
+      "check-then-move: fresh commits land, conflicts still surface") {
+    val dir = Files.createTempDirectory("nio_ckpt_spec")
+    val m = new NioCheckpointFileManager(
+        new Path(s"file:${dir.toAbsolutePath}"), new Configuration()) {
+      override private[streaming] def createLink(link: JPath, target: JPath): Unit =
+        throw new FileSystemException(link.toString, target.toString, "Operation not permitted")
+    }
+    val dst = new Path(s"file:${dir.resolve("batch-2")}")
+    write(m, dst, "first", overwrite = false)
+    assert(read(dir.resolve("batch-2")) == "first")
+    intercept[FileAlreadyExistsException] {
+      write(m, dst, "second", overwrite = false)
+    }
+    assert(read(dir.resolve("batch-2")) == "first")
+    assert(names(dir) == List("batch-2"), s"unexpected leftovers: ${names(dir)}")
   }
 }
