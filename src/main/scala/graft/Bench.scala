@@ -105,23 +105,25 @@ object Bench {
     val shots = scala.collection.mutable.LinkedHashMap.empty[
       String, (SparkSession, String) => DataFrame]
     selected.toSeq.sortBy(_._1).foreach { case (k, v) => shots(k) = v }
-    def timeEntry(name: String, fn: (SparkSession, String) => DataFrame,
-        minOf2: Boolean): Double = {
-      def shot(): Double = {
-        val t0 = System.nanoTime()
-        try force(fn(spark, sfDir)) catch { case _: Throwable => -1L }
-        (System.nanoTime() - t0) / 1e9
-      }
-      val t1 = shot()
-      if (t1 > RerunThresholdSec || minOf2) { reruns += name; math.min(t1, shot()) }
-      else t1
+    // An entry any of whose shots throws is failed: it gets no time and
+    // stays out of the total, the regression gate and the floors.
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+    def shot(name: String): Option[Double] = {
+      val t = timeShot(force(shots(name)(spark, sfDir)))
+      if (t.isEmpty) failed += name
+      t
     }
-    val results0 = shots.toSeq.zipWithIndex.map { case ((name, fn), i) =>
+    def timeEntry(name: String, minOf2: Boolean): Option[Double] =
+      shot(name).flatMap { t1 =>
+        if (t1 > RerunThresholdSec || minOf2) { reruns += name; shot(name).map(math.min(t1, _)) }
+        else Some(t1)
+      }
+    val results0 = shots.keys.toSeq.zipWithIndex.flatMap { case (name, i) =>
       // Every ~20 entries, drop cached tables and nudge the context
       // cleaner: the 100+-entry suite otherwise accumulates old-gen
       // broadcasts that tax every subsequent sub-second query.
       if (i > 0 && i % 20 == 0) { spark.catalog.clearCache(); System.gc() }
-      name -> timeEntry(name, fn, minOf2 = false)
+      timeEntry(name, minOf2 = false).map(name -> _)
     }
 
     // ------------------------------------- per-entry regression gate
@@ -151,12 +153,12 @@ object Bench {
     val RegressionRatio = 2.0
     val MinRegressionSec = 0.3
     val rerunSet0 = reruns.toSet
-    val results = results0.map { case (name, t) =>
+    val results = results0.flatMap { case (name, t) =>
       val suspect = priorTimes.get(name).exists(p =>
         t > RegressionRatio * p && t >= MinRegressionSec && !rerunSet0(name))
       // confirm-or-clear: one more shot, min reported (same discipline
       // as the >2 s tail)
-      name -> (if (suspect) timeEntry(name, shots(name), minOf2 = true) else t)
+      (if (suspect) timeEntry(name, minOf2 = true) else Some(t)).map(name -> _)
     }
     // Deferred third shot: a localized host wave can sit on one
     // alphabetical stretch of the suite for minutes, so the immediate
@@ -175,16 +177,8 @@ object Bench {
         // exactly ONE extra shot, without re-entering timeEntry (whose
         // >2 s auto-rerun would take a fourth shot and append a
         // duplicate `runs` marker)
-        results.map { case (name, t) =>
-          name -> (if (flagged(name)) {
-            val t0 = System.nanoTime()
-            // a shot that THROWS must not enter the min: a transient
-            // failure records milliseconds-to-fail, silently clearing a
-            // genuine flag and committing a bogus too-low floor
-            val ok = try { force(shots(name)(spark, sfDir)); true }
-              catch { case _: Throwable => false }
-            if (ok) math.min(t, (System.nanoTime() - t0) / 1e9) else t
-          } else t)
+        results.flatMap { case (name, t) =>
+          (if (flagged(name)) shot(name).map(math.min(t, _)) else Some(t)).map(name -> _)
         }
       }
     }
@@ -196,7 +190,7 @@ object Bench {
       }
     }
     val regJson = regressions.map { case (n, p, t) =>
-      f""""$n":{"prior_min_secs":$p,"min_secs":$t,"ratio":${t / p}%.2f}"""
+      s""""$n":{"prior_min_secs":$p,"min_secs":$t,"ratio":${math.round(t / p * 100.0) / 100.0}}"""
     }.mkString("{", ",", "}")
 
     // ------------------------------------- environment-health marker
@@ -234,9 +228,10 @@ object Bench {
     // absent names were single-shot. The *_cold throughput legs appear
     // here too: cold = min of 2 fresh post-reset first-samples.
     val rr = reruns.map("\"" + _ + "\":2").mkString("{", ",", "}")
-    val total = if (results1.nonEmpty) results1.map(_._2).sum else 0.0
+    val total = results1.map(_._2).sum
+    val failedJson = jsonNames(failed.toSeq)
     val thr = thrJson.getOrElse("\"throughput\":{}")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"runs":$rr,"regressions":$regJson,"env_health_ratio":$envHealthJson,$thr,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"runs":$rr,"failed":$failedJson,"regressions":$regJson,"env_health_ratio":$envHealthJson,$thr,"sf":"$sfDir"}""")
     // The rich line above is ~14 KB (378 per-query seconds + runs +
     // throughput) and the driver keeps only a 2000-char stdout tail, so
     // its JSON recovery has started mid-object every round (BENCH_r01-r17
@@ -245,13 +240,7 @@ object Bench {
     // contract with summary figures, per-query detail staying in the rich
     // line and in the committed BENCH_TIMES.json artifact. Additions only
     // — nothing is removed or renamed in the rich line.
-    val slowest = results1.sortBy(-_._2).take(25)
-      .map { case (k, v) =>
-        // locale-independent formatting: the f-interpolator's %.3f writes
-        // a comma decimal under some locales, which breaks the JSON
-        s""""$k":${math.round(v * 1000.0) / 1000.0}""" }
-      .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results1.size},"env_health_ratio":$envHealthJson,"slowest":$slowest,"sf":"$sfDir"}""")
+    println(compactLine(results1, failed.toSeq, envHealthJson, sfDir))
     // Persist per-entry timings as a repo artifact: the driver truncates
     // long stdout lines, so round-over-round per-query regressions were
     // only diffable transiently. Full (unfiltered) runs only — an
@@ -274,6 +263,7 @@ object Bench {
         "{\n  \"_sf\": \"" + sfDir + "\",\n  \"_total_secs\": " + total +
           ",\n  \"_env_health_ratio\": " + envHealthJson +
           ",\n  \"_regressions\": " + regJson +
+          ",\n  \"_failed\": " + failedJson +
           thrLine.fold("")(",\n" + _) + ",\n",
         ",\n", "\n}\n")
       // A degraded session (median ratio vs the committed floors above
@@ -289,6 +279,28 @@ object Bench {
       catch { case _: Throwable => () }
     }
     spark.stop()
+  }
+
+  /** Seconds `run` took, or None if it threw: a failure is never a time. */
+  private[graft] def timeShot(run: => Any): Option[Double] = {
+    val t0 = System.nanoTime()
+    try { run; Some((System.nanoTime() - t0) / 1e9) }
+    catch { case _: Throwable => None }
+  }
+
+  private def jsonNames(names: Seq[String]): String =
+    names.map("\"" + _ + "\"").mkString("[", ",", "]")
+
+  /** The compact final line: `total` and `slowest` over the entries that
+    * ran (`results`), the entries that threw in `failed`. */
+  private[graft] def compactLine(results: Seq[(String, Double)], failed: Seq[String],
+      envHealthJson: String, sfDir: String): String = {
+    // locale-independent formatting: the f-interpolator's %.3f writes
+    // a comma decimal under some locales, which breaks the JSON
+    val slowest = results.sortBy(-_._2).take(25)
+      .map { case (k, v) => s""""$k":${math.round(v * 1000.0) / 1000.0}""" }
+      .mkString("{", ",", "}")
+    s"""{"metric":"total","value":${results.map(_._2).sum},"unit":"sec","n_queries":${results.size},"failed":${jsonNames(failed)},"env_health_ratio":$envHealthJson,"slowest":$slowest,"sf":"$sfDir"}"""
   }
 
   /** Produce/fetch throughput in rows/s and MB/s. Two byte measures:

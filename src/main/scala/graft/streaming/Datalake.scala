@@ -2,8 +2,9 @@ package graft.streaming
 
 import graft.Pins._
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.{Failure, Success, Try}
 
 /**
  * Datalake materialization (SURVEY §2.7 D1/D4/D6): continuous
@@ -192,52 +193,18 @@ object Datalake {
 
   /**
    * D1 record multiplexer: route every row to its output table and
-   * append each output hour-partitioned — one cached pass over the
-   * batch, then one filtered write per distinct output (the Spark shape
-   * of `record_multiplexer.h:32` fan-out to partitioning writers).
-   * Returns (output, rows) per output table.
+   * append each output hour-partitioned — the Spark shape of
+   * `record_multiplexer.h:32` fan-out to partitioning writers. A null
+   * route fails the call before anything is written. Returns (output,
+   * rows) per output table, sorted by output.
    */
   def writeMultiplexed(
       batch: DataFrame,
       routeCol: Column,
       tsCol: Column,
       basePath: String,
-      partFn: Column => Column = hourPartition): Seq[(String, Long)] = {
-    // eager localCheckpoint, NOT cache(): the concurrent per-output write
-    // futures plus the counts pass would otherwise race a lazily-filled
-    // InMemoryRelation and each recompute the routed batch from source
-    val routed = batch
-      .withColumn("_output", routeCol)
-      .withColumn("p_key", partFn(tsCol))
-      .pinned()
-    // One aggregation pass yields both the output list and the per-output
-    // row counts — no per-output count() job after each write.
-    val counts = routed.groupBy("_output").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    try writeRouted(routed, basePath, counts)
-    finally graft.Pins.unpin(routed)
-  }
-
-  /** The per-output append fan-out over an already-pinned routed batch
-    * (`_output` route column + `p_key` partition column present). The
-    * writes are independent jobs over the pin — run concurrently (the
-    * reference's multiplexer drives its per-output partitioning writers
-    * concurrently too); each write still clusters by partition key first
-    * — see commit() note. */
-  private def writeRouted(routed: DataFrame, basePath: String,
-      counts: Map[String, Long]): Seq[(String, Long)] = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val writes = counts.keys.toSeq.sorted.map { o =>
-      o -> Future {
-        routed.where(col("_output") === o).drop("_output")
-          .repartition(col("p_key"))
-          .write.mode("append").partitionBy("p_key").parquet(s"$basePath/$o")
-      }
-    }
-    writes.map { case (o, f) => Await.result(f, Duration.Inf); o -> counts(o) }
-  }
+      partFn: Column => Column = hourPartition): Seq[(String, Long)] =
+    multiplex(batch, lit(null).cast("string"), routeCol, tsCol, basePath, partFn)
 
   /** Dead-letter table directory name under the multiplexer base path. */
   val DlqDir = "_dlq"
@@ -261,7 +228,7 @@ object Datalake {
    * `basePath/_dlq` with their intended output and an `error_code`
    * column, partitioned like every other output — accounted, not
    * dropped, and never poisoning the commit. Returns (output, rows)
-   * per output table including the `_dlq` entry when non-empty.
+   * per output table, then the `_dlq` entry when non-empty.
    */
   def writeMultiplexedWithDlq(
       batch: DataFrame,
@@ -273,44 +240,75 @@ object Datalake {
       incompatible: Seq[Int],
       partFn: Column => Column = hourPartition): Seq[(String, Long)] = {
     import graft.registry.Ingest
-    // ONE pin per micro-batch carrying the route and partition columns
-    // too (the old spelling pinned `classified`, then writeMultiplexed
-    // re-pinned the routed valid rows — two eager materializations), and
-    // ONE aggregation pass yielding both the valid per-output counts and
-    // the DLQ count (the old spelling ran a separate dlq.count() job).
-    val classified = batch
-      .withColumn("_schema_id",
-        when(Ingest.magicOf(valueCol) === lit(Array[Byte](0)), Ingest.schemaIdOf(valueCol)))
-      .withColumn("error_code",
-        when(col("_schema_id").isNull, "bad_input")
-          .when(!col("_schema_id").isin(registered: _*), "translation_error")
-          .when(col("_schema_id").isin(incompatible: _*), "incompatible_schema"))
+    val schemaId = when(Ingest.magicOf(valueCol) === lit(Array[Byte](0)), Ingest.schemaIdOf(valueCol))
+    val errorCode = when(schemaId.isNull, "bad_input")
+      .when(!schemaId.isin(registered: _*), "translation_error")
+      .when(schemaId.isin(incompatible: _*), "incompatible_schema")
+    multiplex(batch, errorCode, routeCol, tsCol, basePath, partFn)
+  }
+
+  /**
+   * Both multiplexers: rows with a null `errorCode` go to their route's
+   * table, the others to [[DlqDir]]. Every write reads one pin of the
+   * routed batch, so the upstream plan (a WASM transform, say) runs once,
+   * not once per output. One `p_key` shuffle runs before the pin: each
+   * hour then sits in one task, so every write makes one file per
+   * partition directory (see commit()) with no shuffle of its own. Counts
+   * are observed on the pin and on each write, never aggregated by a job
+   * of their own: the outputs present and the DLQ size on the pin, each
+   * table's rows on its write.
+   */
+  private def multiplex(batch: DataFrame, errorCode: Column, routeCol: Column,
+      tsCol: Column, basePath: String, partFn: Column => Column): Seq[(String, Long)] = {
+    val seen = Observation()
+    val valid = col("error_code").isNull
+    val routed = batch
+      .withColumn("error_code", errorCode)
       .withColumn("_output", routeCol)
       .withColumn("p_key", partFn(tsCol))
+      .observe(seen, collect_set(when(valid, col("_output"))).as("outputs"),
+        count_if(!valid).as("dlq"), count_if(valid && col("_output").isNull).as("unrouted"))
+      .repartition(col("p_key"))
       .pinned()
-    val allCounts = classified
-      .groupBy(col("_output"), col("error_code").isNotNull.as("_dlq"))
-      .count().collect()
-    val counts = allCounts.filter(!_.getBoolean(1))
-      .map(r => r.getString(0) -> r.getLong(2)).toMap
-    val nDlq = allCounts.filter(_.getBoolean(1)).map(_.getLong(2)).sum
-    // The DLQ append is independent of the valid-path appends — overlap it
-    // with them instead of serializing after (guide §2.6).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
     try {
-      val dlqW = if (nDlq == 0) None else Some(Future {
-        classified.where(col("error_code").isNotNull).drop("_schema_id")
-          .repartition(col("p_key"))
-          .write.mode("append").partitionBy("p_key").parquet(s"$basePath/$DlqDir")
+      val m = seen.get
+      require(m("unrouted") == 0L, s"${m("unrouted")} valid rows have a null route")
+      val tables = m("outputs").asInstanceOf[scala.collection.Seq[String]].toSeq.sorted.map(o =>
+        o -> routed.where(valid && col("_output") === o).drop("_output", "error_code"))
+      val dlq = if (m("dlq") == 0L) Nil else Seq(DlqDir -> routed.where(!valid))
+      inParallel((tables ++ dlq).map { case (o, rows) =>
+        () => o -> appendCounted(rows, s"$basePath/$o")
       })
-      val main = writeRouted(
-        classified.where(col("error_code").isNull).drop("error_code", "_schema_id"),
-        basePath, counts)
-      dlqW.foreach(Await.result(_, Duration.Inf))
-      if (nDlq > 0) main :+ (DlqDir -> nDlq) else main
-    } finally graft.Pins.unpin(classified)
+    } finally graft.Pins.unpin(routed)
+  }
+
+  /** Append `rows` partitioned by `p_key`; returns the rows written,
+    * observed on the write itself. */
+  private def appendCounted(rows: DataFrame, path: String): Long = {
+    val n = Observation()
+    rows.observe(n, count(lit(1)).as("n"))
+      .write.mode("append").partitionBy("p_key").parquet(path)
+    n.get("n").asInstanceOf[Long]
+  }
+
+  /** Runs the independent `legs` concurrently (the reference's
+    * multiplexer drives its partitioning writers concurrently too), each
+    * on a thread started here: a new thread inherits the caller's Spark
+    * local properties (job group, description, scheduler pool), so
+    * cancelling the caller's job group cancels every leg. Every leg is
+    * joined before this returns or throws, then the first failure is
+    * rethrown — nothing the legs read is released under them. */
+  private def inParallel[T](legs: Seq[() => T]): Seq[T] = {
+    val results = new Array[Try[T]](legs.size)
+    val threads = legs.indices.map(i => new Thread(() => results(i) =
+      try Success(legs(i)()) catch { case e: Throwable => Failure(e) }, "datalake-multiplex"))
+    threads.foreach(_.start())
+    var interrupted = false
+    threads.foreach { t =>
+      while (t.isAlive) try t.join() catch { case _: InterruptedException => interrupted = true }
+    }
+    if (interrupted) Thread.currentThread().interrupt()
+    results.toSeq.map(_.get)
   }
 
   /**

@@ -1,6 +1,6 @@
 package graft.wasm
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
 import graft.functions.RecordBatchCodec.Rec
 import TransformAbi.{BatchHeader, BatchIn, Emitted}
@@ -22,6 +22,9 @@ import TransformAbi.{BatchHeader, BatchIn, Emitted}
  * task's output buffer; at 100 TB the bound is what keeps executor
  * memory flat, and the run boundary is the documented divergence from
  * the reference's process-lifetime VM.
+ *
+ * The row encoders are built once per JVM, not derived by reflection on
+ * every call: a streaming caller plans this transform every trigger.
  */
 object WasmTransform {
 
@@ -29,6 +32,9 @@ object WasmTransform {
       key: Array[Byte], value: Array[Byte])
   final case class Out(partition: Int, batch_index: Int, seq: Int,
       topic: String, key: Array[Byte], value: Array[Byte])
+
+  private val InEncoder: Encoder[In] = Encoders.product[In]
+  private val OutEncoder: Encoder[Out] = Encoders.product[Out]
 
   val DefaultRecordsPerBatch = 256
   val DefaultRecordsPerRun = 8192
@@ -79,23 +85,18 @@ object WasmTransform {
       recordsPerRun: Int = DefaultRecordsPerRun,
       extraHostFactory: Option[() => Map[(String, String), WasmInterp.HostFunc]] =
         None): DataFrame = {
-    val spark = input.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(moduleBytes)
-    val perBatch = recordsPerBatch
-    val perRun = recordsPerRun
+    val bc = input.sparkSession.sparkContext.broadcast(moduleBytes)
     val ds: Dataset[In] = input
       .select(col("partition").cast("int"), col("offset").cast("long"),
         col("timestamp").cast("long"), col("key").cast("binary"),
         col("value").cast("binary"))
-      .as[In]
+      .as(InEncoder)
       .repartition(col("partition"))
       .sortWithinPartitions("partition", "offset")
-    val hostFactory = extraHostFactory
     ds.mapPartitions { (rows: Iterator[In]) =>
       // consecutive same-partition runs: the sort guarantees each Kafka
       // partition is one contiguous span of the task's iterator
-      val extraHost = hostFactory.map(_()).getOrElse(
+      val extraHost = extraHostFactory.map(_()).getOrElse(
         Map.empty[(String, String), WasmInterp.HostFunc])
       val src = rows.buffered
       new Iterator[Out] {
@@ -106,10 +107,10 @@ object WasmTransform {
             val p = src.head.partition
             val run = new scala.collection.mutable.ArrayBuffer[In](256)
             while (src.hasNext && src.head.partition == p &&
-                run.size < perRun)
+                run.size < recordsPerRun)
               run += src.next()
             val (emitted, _) = TransformAbi.runModule(decoded(bc.value),
-              toBatches(run.iterator, perBatch), extraHost)
+              toBatches(run.iterator, recordsPerBatch), extraHost)
             pending = emitted.iterator.map { e: Emitted =>
               val (k, v) = TransformAbi.parsePayload(e.payload) match {
                 case Some((k0, v0, _)) => (k0, v0)
@@ -121,6 +122,6 @@ object WasmTransform {
           pending.next()
         }
       }
-    }.toDF()
+    }(OutEncoder).toDF()
   }
 }

@@ -1,7 +1,15 @@
 package graft.streaming
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import java.util.Properties
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
+import scala.concurrent.{Await, Future}
+import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.SparkSpec
@@ -82,6 +90,146 @@ class DatalakeSpec extends SparkSpec {
     assert(written.toMap === Map("t_a" -> 7L, "t_b" -> 13L))
     assert(spark.read.parquet(s"$base/t_a").count() === 7)
     assert(spark.read.parquet(s"$base/t_b").where(col("p_key").isNotNull).count() === 13)
+  }
+
+  /** Registry-framed rows: offset i, hour i / 6 % 3, route t_a (even i) or
+    * t_b, and by `defect(i)` a bad magic byte (0), an unregistered schema
+    * id (1), a registered but incompatible id (2) or a valid id (else). */
+  private def framed(ids: Seq[Int], defect: Int => Int = _ % 6): DataFrame = ids.map { i =>
+    val env = defect(i) match {
+      case 0 => Array[Byte](1, 0, 0, 0, 1)
+      case 1 => Array[Byte](0, 0, 0, 0, 99)
+      case 2 => Array[Byte](0, 0, 0, 0, 7)
+      case _ => Array[Byte](0, 0, 0, 0, 1)
+    }
+    (i.toLong, s"2024-01-01 0${i / 6 % 3}:00:00", env ++ s"v$i".getBytes, if (i % 2 == 0) "a" else "b")
+  }.toDF("offset", "ts_s", "value", "kind")
+    .withColumn("timestamp", col("ts_s").cast("timestamp")).drop("ts_s")
+
+  private val errorOf = Map(0 -> "bad_input", 1 -> "translation_error", 2 -> "incompatible_schema")
+  private def routeOf(i: Int) = if (i % 2 == 0) "t_a" else "t_b"
+
+  private def muxDlq(batch: DataFrame, base: String) =
+    Datalake.writeMultiplexedWithDlq(batch, concat(lit("t_"), col("kind")), col("timestamp"),
+      base, col("value"), registered = Seq(1, 7), incompatible = Seq(7))
+
+  private def offsets(path: String) =
+    spark.read.parquet(path).select("offset").as[Long].collect().toSet
+
+  /** Properties of every job started while `body` runs. The listener bus
+    * is asynchronous, so a marker job started after `body` (and one
+    * before it), each under a group of its own, shows that every job
+    * start in between has been delivered. */
+  private def jobsDuring(body: => Any): Seq[Properties] = {
+    val sc = spark.sparkContext
+    val jobs = new LinkedBlockingQueue[Properties]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.put(Option(e.properties).getOrElse(new Properties))
+    }
+    def untilMarker(): Seq[Properties] = {
+      val id = java.util.UUID.randomUUID().toString
+      sc.setJobGroup(id, "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      Iterator.continually(jobs.poll(60, TimeUnit.SECONDS))
+        .map { p => assert(p != null, "marker job start not delivered"); p }
+        .takeWhile(_.getProperty("spark.jobGroup.id") != id).toSeq
+    }
+    sc.addSparkListener(listener)
+    try { untilMarker(); body; untilMarker() }
+    finally sc.removeSparkListener(listener)
+  }
+
+  test("multiplexer with DLQ: counts equal a groupBy oracle; every row lands in its table or error code") {
+    val base = tmp("muxdlq")
+    val ids = 0 until 60
+    val written = muxDlq(framed(ids).repartition(3), base)
+    val oracle = ids.groupBy(i => if (errorOf.contains(i % 6)) Datalake.DlqDir else routeOf(i))
+      .map { case (t, is) => t -> is.size.toLong }
+    assert(written.toMap === oracle)
+    assert(written.map(_._1) === Seq("t_a", "t_b", Datalake.DlqDir))
+    for (t <- Seq("t_a", "t_b")) {
+      assert(offsets(s"$base/$t") ===
+        ids.filter(i => !errorOf.contains(i % 6) && routeOf(i) == t).map(_.toLong).toSet)
+      assert(spark.read.parquet(s"$base/$t").columns.toSet ===
+        Set("offset", "value", "kind", "timestamp", "p_key"))
+    }
+    val dlq = spark.read.parquet(s"$base/${Datalake.DlqDir}")
+      .select("offset", "error_code", "_output").as[(Long, String, String)].collect()
+    assert(dlq.length === 30)
+    assert(dlq.toSet === ids.collect { case i if errorOf.contains(i % 6) =>
+      (i.toLong, errorOf(i % 6), routeOf(i)) }.toSet)
+  }
+
+  test("multiplexer: an empty batch returns no outputs, writes no table and does not block") {
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val inputs = Seq(
+      framed(Nil),
+      framed(0 until 6).where(lit(false)),
+      spark.range(0).select(col("id").as("offset"), lit(Array[Byte](0, 0, 0, 0, 1)).as("value"),
+        lit("a").as("kind"), current_timestamp().as("timestamp")))
+    for (in <- inputs) {
+      val base = tmp("muxempty")
+      assert(Await.result(Future(muxDlq(in, base)), 2.minutes) === Seq())
+      assert(Await.result(Future(Datalake.writeMultiplexed(in, col("kind"), col("timestamp"),
+        base)), 2.minutes) === Seq())
+      assert(new java.io.File(base).list().isEmpty)
+    }
+  }
+
+  test("multiplexer: an all-DLQ batch writes only the DLQ; a clean batch writes no DLQ") {
+    val allBad = tmp("muxbad")
+    assert(muxDlq(framed(0 until 12, _ % 3), allBad) === Seq(Datalake.DlqDir -> 12L))
+    assert(new java.io.File(allBad).list().toSet === Set(Datalake.DlqDir))
+    val clean = tmp("muxclean")
+    assert(muxDlq(framed(0 until 12, _ => 3), clean) === Seq("t_a" -> 6L, "t_b" -> 6L))
+    assert(new java.io.File(clean).list().toSet === Set("t_a", "t_b"))
+  }
+
+  test("multiplexer: a valid row with a null route fails the call before anything is written") {
+    val base = tmp("muxnull")
+    val route = when(col("offset") =!= 7, concat(lit("t_"), col("kind")))
+    intercept[IllegalArgumentException](Datalake.writeMultiplexed(framed(0 until 12), route,
+      col("timestamp"), base))
+    assert(new java.io.File(base).list().isEmpty)
+  }
+
+  test("multiplexer writes exactly one file per (output, p_key) directory") {
+    val base = tmp("muxfiles")
+    val in = framed(0 until 60).repartition(4)
+    assert(in.rdd.getNumPartitions === 4)
+    muxDlq(in, base)
+    val dirs = Files.list(Paths.get(base)).iterator.asScala.toSeq
+      .flatMap(t => Files.list(t).iterator.asScala.filter(Files.isDirectory(_)))
+    assert(dirs.size === 9) // t_a, t_b and _dlq, three hours each
+    for (d <- dirs)
+      assert(Files.list(d).iterator.asScala.count(_.toString.endsWith(".parquet")) === 1, d)
+  }
+
+  test("multiplexer runs 6 Spark jobs over an input with one upstream shuffle") {
+    // the upstream shuffle, the p_key shuffle, the pin, one write per
+    // table (t_a, t_b, _dlq): the counts come from observations, not jobs
+    val in = framed(0 until 60).repartition(3, col("offset"))
+    assert(jobsDuring(muxDlq(in, tmp("muxjobs"))).size === 6)
+  }
+
+  test("multiplexer jobs carry the caller's job group") {
+    val sc = spark.sparkContext
+    val jobs = jobsDuring {
+      sc.setJobGroup("g", "multiplex")
+      try muxDlq(framed(0 until 60), tmp("muxgroup")) finally sc.clearJobGroup()
+    }
+    assert(jobs.nonEmpty)
+    assert(jobs.map(_.getProperty("spark.jobGroup.id")).toSet === Set("g"))
+  }
+
+  test("multiplexer: a failing leg fails the call only after every other leg has finished") {
+    val base = tmp("muxfail")
+    Files.write(Paths.get(base, "t_a"), Array[Byte](1)) // not a directory: its write fails
+    intercept[Exception](muxDlq(framed(0 until 60), base))
+    for (t <- Seq("t_b", Datalake.DlqDir))
+      assert(Files.exists(Paths.get(base, t, "_SUCCESS")), t)
+    assert(offsets(s"$base/t_b").size === 20)
   }
 
   private val inputSchema = StructType(Seq(
