@@ -292,7 +292,10 @@ object Bench {
     names.map("\"" + _ + "\"").mkString("[", ",", "]")
 
   /** The compact final line: `total` and `slowest` over the entries that
-    * ran (`results`), the entries that threw in `failed`. */
+    * ran (`results`); `n_failed` counts the entries that threw and
+    * `failed` names the first few, so the line stays short enough for a
+    * reader that keeps only the output's last 2000 characters (the rich
+    * line and `_failed` in BENCH_TIMES.json list them all). */
   private[graft] def compactLine(results: Seq[(String, Double)], failed: Seq[String],
       envHealthJson: String, sfDir: String): String = {
     // locale-independent formatting: the f-interpolator's %.3f writes
@@ -300,7 +303,7 @@ object Bench {
     val slowest = results.sortBy(-_._2).take(25)
       .map { case (k, v) => s""""$k":${math.round(v * 1000.0) / 1000.0}""" }
       .mkString("{", ",", "}")
-    s"""{"metric":"total","value":${results.map(_._2).sum},"unit":"sec","n_queries":${results.size},"failed":${jsonNames(failed)},"env_health_ratio":$envHealthJson,"slowest":$slowest,"sf":"$sfDir"}"""
+    s"""{"metric":"total","value":${results.map(_._2).sum},"unit":"sec","n_queries":${results.size},"n_failed":${failed.size},"failed":${jsonNames(failed.take(5))},"env_health_ratio":$envHealthJson,"slowest":$slowest,"sf":"$sfDir"}"""
   }
 
   /** Produce/fetch throughput in rows/s and MB/s. Two byte measures:

@@ -6,11 +6,13 @@ import java.util.OptionalLong
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -28,9 +30,15 @@ import graft.functions.RecordBatchCodec
  * Spark-first execution mapping:
  *  - SEGMENT PRUNING happens at plan time: pushed partition/offset/
  *    timestamp bounds drop whole segment files against the sidecar
- *    index (one InputPartition per surviving segment — the analogue of
- *    parquet partition pruning, but over log segments). The scan
- *    description carries `segments=<kept>/<total>` so plans pin it.
+ *    index — the analogue of parquet partition pruning, but over log
+ *    segments. The scan description carries `segments=<kept>/<total>`
+ *    so plans pin it.
+ *  - PACKING: the surviving segments are packed, in index order, into
+ *    input partitions by Spark's small-file rule ([[LogSource.pack]]),
+ *    so a scan over hundreds of KB-sized segments runs a few tasks, not
+ *    one per segment. Each task's reader walks its segments in a chain,
+ *    like the reference's `storage/log_reader.h` over a partition's
+ *    segment set.
  *  - BATCH SEEKING happens at read time: each reader walks 61-byte
  *    batch headers and skips the payload of any batch whose
  *    offset/timestamp bounds miss the residual predicate — payloads
@@ -67,6 +75,10 @@ object LogSource {
 
   final case class Segment(path: String, partition: Int, baseOffset: Long,
       lastOffset: Long, minTs: Long, maxTs: Long)
+
+  /** One segment of a task and the bounds its batches are read under;
+    * a micro-batch's bounds differ per Kafka partition. */
+  final case class SegmentRead(segment: Segment, bounds: Bounds)
 
   /** Bounds a pushed-filter set resolves to (inclusive). */
   final case class Bounds(partitions: Option[Set[Int]], minOffset: Long,
@@ -162,6 +174,39 @@ object LogSource {
         s""""min_ts":${rows.map(_._2).min},"max_ts":${rows.map(_._2).max}}""")
   }
 
+  /**
+   * Packs segment reads, each with its file size, into input partitions
+   * by the rule Spark plans small files with: the split size is
+   * `FilePartition.maxSplitBytes` over Σ(size + openCost)
+   * (`spark.sql.files.maxPartitionBytes`, `.openCostInBytes`,
+   * `.minPartitionNum` or else the default parallelism), and a partition
+   * closes when the next segment would take it past that size. Unlike
+   * `FileSourceScanExec` the reads are never sorted by size: they stay
+   * in the order given (index order), so a task walks each Kafka
+   * partition's segments in offset order and a scan without `orderBy`
+   * returns each partition's rows in offset order.
+   */
+  def pack(reads: Seq[(SegmentRead, Long)], limit: Int): Array[InputPartition] = {
+    val spark = SparkSession.active
+    val openCost = spark.sessionState.conf.filesOpenCostInBytes
+    val maxSplit = FilePartition.maxSplitBytes(spark, reads.map(_._2 + openCost).sum)
+    val parts = Array.newBuilder[InputPartition]
+    val current = scala.collection.mutable.ArrayBuffer.empty[SegmentRead]
+    var currentSize = 0L
+    def close(): Unit = if (current.nonEmpty) {
+      parts += LogInputPartition(current.toSeq, limit)
+      current.clear()
+      currentSize = 0L
+    }
+    reads.foreach { case (read, size) =>
+      if (currentSize + size > maxSplit) close()
+      current += read
+      currentSize += size + openCost
+    }
+    close()
+    parts.result()
+  }
+
   def writeIndex(root: String, lines: Seq[String]): Unit =
     Files.write(Paths.get(root, "_index.jsonl"),
       lines.sorted.mkString("", "\n", "\n").getBytes(UTF_8))
@@ -254,6 +299,10 @@ class LogScan(path: String, pushed: Array[Filter], required: StructType,
 
   private lazy val all = LogSource.parseIndex(path)
   private lazy val kept = all.filter(bounds.segmentSurvives)
+  // stat'ed once per scan: the planner asks for statistics several
+  // times, and packing needs the same sizes
+  private lazy val keptSizes: Seq[(LogSource.Segment, Long)] =
+    kept.map(s => s -> Files.size(Paths.get(s.path)))
 
   // Runtime (join-driven) partition restriction — dynamic partition
   // pruning's DSv2 hook: a selective dimension join on `partition`
@@ -276,9 +325,9 @@ class LogScan(path: String, pushed: Array[Filter], required: StructType,
       case _ => () // non-partition runtime filters don't prune segments
     }
 
-  private def runtimeKept: Seq[LogSource.Segment] = runtimePartitions match {
-    case None => kept
-    case Some(ps) => kept.filter(s => ps.contains(s.partition))
+  private def runtimeKept: Seq[(LogSource.Segment, Long)] = runtimePartitions match {
+    case None => keptSizes
+    case Some(ps) => keptSizes.filter { case (s, _) => ps.contains(s.partition) }
   }
 
   override def readSchema(): StructType = required
@@ -292,19 +341,22 @@ class LogScan(path: String, pushed: Array[Filter], required: StructType,
       (if (limit >= 0) s" limit=$limit" else "")
 
   override def planInputPartitions(): Array[InputPartition] =
-    runtimeKept.map(s => LogInputPartition(s, bounds, limit)).toArray
+    LogSource.pack(runtimeKept.map { case (s, size) =>
+      LogSource.SegmentRead(s, bounds) -> size }, limit)
   override def createReaderFactory(): PartitionReaderFactory =
     new LogReaderFactory(required.fieldNames.toIndexedSeq)
 
   override def estimateStatistics(): Statistics = new Statistics {
-    override def sizeInBytes(): OptionalLong = OptionalLong.of(
-      kept.map(s => Files.size(Paths.get(s.path))).sum)
+    override def sizeInBytes(): OptionalLong =
+      OptionalLong.of(keptSizes.map(_._2).sum)
     override def numRows(): OptionalLong = OptionalLong.empty()
   }
 }
 
-final case class LogInputPartition(segment: LogSource.Segment,
-    bounds: LogSource.Bounds, limit: Int = -1) extends InputPartition
+/** One task's segments, read in order; `limit` caps the rows the whole
+  * task emits. */
+final case class LogInputPartition(reads: Seq[LogSource.SegmentRead],
+    limit: Int = -1) extends InputPartition
 
 /**
  * The WRITE path: the writer DECLARES what a log segment needs —
@@ -493,12 +545,13 @@ object LogStreamOffset {
 /**
  * Structured Streaming over the same on-disk log: the segment index IS
  * the discovery mechanism — `latestOffset` re-reads the sidecar, each
- * micro-batch plans the segments overlapping (start, end] per
- * partition, and the readers are the identical header-seeking scanners
- * the batch path uses, with the batch window carried in the pushed
- * bounds. Restarting from a checkpoint resumes at the committed
- * per-partition cursor — new segments appended between runs are read
- * exactly once.
+ * micro-batch takes the segments overlapping [start, end) per
+ * partition, in index order, each carrying its partition's batch
+ * window in its bounds, and packs them into tasks with the batch
+ * path's rule ([[LogSource.pack]]); the same chained header-seeking
+ * reader serves both. Restarting from a checkpoint resumes at the
+ * committed per-partition cursor — new segments appended between runs
+ * are read exactly once.
  */
 class LogMicroBatchStream(path: String, pushed: LogSource.Bounds,
     fields: Seq[String])
@@ -521,19 +574,19 @@ class LogMicroBatchStream(path: String, pushed: LogSource.Bounds,
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s0 = start.asInstanceOf[LogStreamOffset].ends
     val e0 = end.asInstanceOf[LogStreamOffset].ends
-    val segs = segments
-    e0.toSeq.flatMap { case (p, endOff) =>
-      val startOff = s0.getOrElse(p, 0L)
-      if (endOff <= startOff) Nil
-      else segs.filter(s => s.partition == p &&
-          s.lastOffset >= startOff && s.baseOffset < endOff)
-        .map { seg =>
+    val reads = segments.flatMap { seg =>
+      val startOff = s0.getOrElse(seg.partition, 0L)
+      e0.get(seg.partition)
+        .filter(endOff => endOff > startOff &&
+          seg.lastOffset >= startOff && seg.baseOffset < endOff)
+        .map { endOff =>
           val b = pushed.copy(
             minOffset = math.max(pushed.minOffset, startOff),
             maxOffset = math.min(pushed.maxOffset, endOff - 1))
-          LogInputPartition(seg, b)
+          LogSource.SegmentRead(seg, b) -> Files.size(Paths.get(seg.path))
         }
-    }.toArray
+    }
+    LogSource.pack(reads, limit = -1)
   }
   override def createReaderFactory(): PartitionReaderFactory =
     new LogReaderFactory(fields)
@@ -545,14 +598,14 @@ class LogReaderFactory(fields: Seq[String]) extends PartitionReaderFactory {
 }
 
 /**
- * Streams one segment through a FileChannel — the whole file is NEVER
- * materialized (reference segments run 128 MiB–1 GiB,
- * `storage/disk_log_impl.h`; a whole-file read would be an unbounded
- * heap spike per task). Per batch, a 61-byte positional header read
- * decides: outside the offset/timestamp window the reader re-positions
- * PAST the payload without touching it (a true seek — the
- * `storage/log_reader.h:270-296` skip saves I/O, not just
- * decompression); inside it, only that batch's bytes are read, and
+ * Walks a task's segments in order, one FileChannel open at a time, and
+ * streams each — the whole file is NEVER materialized (reference
+ * segments run 128 MiB–1 GiB, `storage/disk_log_impl.h`; a whole-file
+ * read would be an unbounded heap spike per task). Per batch, a 61-byte
+ * positional header read decides: outside the segment's offset/timestamp
+ * window the reader re-positions PAST the payload without touching it (a
+ * true seek — the `storage/log_reader.h:270-296` skip saves I/O, not
+ * just decompression); inside it, only that batch's bytes are read, and
  * records decode unless projection needs none of timestamp/key/value
  * and offsets are dense, in which case rows come from header math
  * alone. Peak heap per reader is one surviving batch.
@@ -561,19 +614,33 @@ class LogPartitionReader(p: LogInputPartition, fields: Seq[String])
     extends PartitionReader[InternalRow] {
   import graft.functions.RecordBatchCodec._
 
-  private val ch = java.nio.channels.FileChannel.open(
-    Path.of(p.segment.path), java.nio.file.StandardOpenOption.READ)
-  private val fileSize = ch.size()
+  private val reads = p.reads.iterator
+  private var read: LogSource.SegmentRead = _
+  private var ch: java.nio.channels.FileChannel = _
+  private var fileSize = 0L
   private val headerArr = new Array[Byte](HeaderSize)
   private var pos = 0L
   private var rows: Iterator[InternalRow] = Iterator.empty
   private var current: InternalRow = _
-  /** Bytes actually fetched from the channel (headers + surviving
+  /** Bytes actually fetched from the channels (headers + surviving
     * batches) — the spec's bounded-I/O accounting hook. */
   private[sources] var bytesFetched = 0L
   private val needsRecords =
     fields.contains("timestamp") || fields.contains("key") ||
       fields.contains("value")
+
+  /** Closes the current segment and opens the task's next one; false
+    * when none is left. */
+  private def openNext(): Boolean = {
+    close()
+    if (!reads.hasNext) return false
+    read = reads.next()
+    ch = java.nio.channels.FileChannel.open(
+      Path.of(read.segment.path), java.nio.file.StandardOpenOption.READ)
+    fileSize = ch.size()
+    pos = 0L
+    true
+  }
 
   /** Positional read of exactly `len` bytes at `at`; loud on short reads
     * (a file truncated between size() and here must not decode). */
@@ -585,7 +652,7 @@ class LogPartitionReader(p: LogInputPartition, fields: Seq[String])
     while (bb.hasRemaining) {
       val n = ch.read(bb, off)
       require(n > 0,
-        s"segment ${p.segment.path} truncated at $off (wanted $len bytes at $at)")
+        s"segment ${read.segment.path} truncated at $off (wanted $len bytes at $at)")
       off += n
     }
     bytesFetched += len
@@ -595,7 +662,7 @@ class LogPartitionReader(p: LogInputPartition, fields: Seq[String])
   private def rowOf(offset: Long, ts: Long, key: Array[Byte],
       value: Array[Byte]): InternalRow = {
     val vals = fields.map {
-      case "partition" => p.segment.partition
+      case "partition" => read.segment.partition
       case "offset" => offset
       case "timestamp" => ts
       case "key" => key
@@ -604,7 +671,10 @@ class LogPartitionReader(p: LogInputPartition, fields: Seq[String])
     new GenericInternalRow(vals.toArray[Any])
   }
 
+  /** Next batch of the current segment with rows in its window; false
+    * once the segment is exhausted. */
   private def nextBatch(): Boolean = {
+    val b = read.bounds
     while (pos + HeaderSize <= fileSize) {
       readFully(pos, HeaderSize, into = headerArr)
       val h = decodeHeader(headerArr)
@@ -612,16 +682,14 @@ class LogPartitionReader(p: LogInputPartition, fields: Seq[String])
       // a torn tail (crash mid-append) must fail loudly, not decode
       // fabricated bytes
       require(total >= HeaderSize && pos + total <= fileSize,
-        s"segment ${p.segment.path} truncated at $pos (batch claims $total bytes)")
+        s"segment ${read.segment.path} truncated at $pos (batch claims $total bytes)")
       val batchLast = h.baseOffset + h.lastOffsetDelta
-      val inWindow = batchLast >= p.bounds.minOffset &&
-        h.baseOffset <= p.bounds.maxOffset &&
-        h.maxTimestamp >= p.bounds.minTs && h.firstTimestamp <= p.bounds.maxTs
+      val inWindow = batchLast >= b.minOffset && h.baseOffset <= b.maxOffset &&
+        h.maxTimestamp >= b.minTs && h.firstTimestamp <= b.maxTs
       // header math can only replace a record parse when the batch
       // lies ENTIRELY inside the time window — a partially-overlapping
       // batch needs per-record timestamps to filter exactly
-      val tsWhole = h.firstTimestamp >= p.bounds.minTs &&
-        h.maxTimestamp <= p.bounds.maxTs
+      val tsWhole = h.firstTimestamp >= b.minTs && h.maxTimestamp <= b.maxTs
       if (!inWindow) {
         pos += total // log_reader-style skip: payload never read at all
       } else if (!needsRecords && tsWhole &&
@@ -637,7 +705,7 @@ class LogPartitionReader(p: LogInputPartition, fields: Seq[String])
         val base = h.baseOffset
         rows = (0 until h.recordCount).iterator
           .map(i => base + i)
-          .filter(o => o >= p.bounds.minOffset && o <= p.bounds.maxOffset)
+          .filter(o => o >= b.minOffset && o <= b.maxOffset)
           .map(o => rowOf(o, -1L, null, null))
         pos += total
         if (rows.hasNext) return true
@@ -648,8 +716,7 @@ class LogPartitionReader(p: LogInputPartition, fields: Seq[String])
         rows = recs.iterator
           .map(r => (base + r.offsetDelta, firstTs + r.tsDelta, r.key, r.value))
           .filter { case (o, ts, _, _) =>
-            o >= p.bounds.minOffset && o <= p.bounds.maxOffset &&
-              ts >= p.bounds.minTs && ts <= p.bounds.maxTs
+            o >= b.minOffset && o <= b.maxOffset && ts >= b.minTs && ts <= b.maxTs
           }
           .map { case (o, ts, k, v) => rowOf(o, ts, k, v) }
         pos += total
@@ -659,7 +726,7 @@ class LogPartitionReader(p: LogInputPartition, fields: Seq[String])
     // a non-empty tail shorter than a header is still a torn append —
     // the mid-header variant of the truncation guard
     require(pos == fileSize,
-      s"segment ${p.segment.path} truncated at $pos " +
+      s"segment ${read.segment.path} truncated at $pos " +
         s"(${fileSize - pos} trailing bytes, shorter than a batch header)")
     false
   }
@@ -667,14 +734,17 @@ class LogPartitionReader(p: LogInputPartition, fields: Seq[String])
   private var emitted = 0
 
   override def next(): Boolean = {
-    // pushed LIMIT: stop walking headers once this reader has produced
+    // pushed LIMIT: stop walking headers once this task has produced
     // enough rows for the global limit on its own
     if (p.limit >= 0 && emitted >= p.limit) return false
-    while (!rows.hasNext) if (!nextBatch()) return false
+    while (!rows.hasNext) {
+      val more = if (ch == null) openNext() else nextBatch() || openNext()
+      if (!more) return false
+    }
     current = rows.next()
     emitted += 1
     true
   }
   override def get(): InternalRow = current
-  override def close(): Unit = ch.close()
+  override def close(): Unit = if (ch != null) { ch.close(); ch = null }
 }

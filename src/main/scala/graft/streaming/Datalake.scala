@@ -298,7 +298,7 @@ object Datalake {
     * cancelling the caller's job group cancels every leg. Every leg is
     * joined before this returns or throws, then the first failure is
     * rethrown — nothing the legs read is released under them. */
-  private def inParallel[T](legs: Seq[() => T]): Seq[T] = {
+  private[graft] def inParallel[T](legs: Seq[() => T]): Seq[T] = {
     val results = new Array[Try[T]](legs.size)
     val threads = legs.indices.map(i => new Thread(() => results(i) =
       try Success(legs(i)()) catch { case e: Throwable => Failure(e) }, "datalake-multiplex"))

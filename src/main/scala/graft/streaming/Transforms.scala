@@ -167,20 +167,17 @@ object Transforms {
         try {
           val outputs = df.select("_output").distinct().collect().map(_.getString(0)).sorted
           // independent appends over the pinned batch — overlap them
-          // (guide §2.6) instead of paying per-job driver latency N times
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.duration.Duration
-          import scala.concurrent.ExecutionContext.Implicits.global
-          outputs.map { o =>
-            Future {
-              val rows = df.where(col("_output") === o)
-              val payload = rows.schema("_value").dataType match {
-                case _: StructType => rows.select("_value.*")
-                case _             => rows.select(col("_value").as("value"))
-              }
-              payload.write.mode("append").parquet(s"$basePath/$o")
+          // instead of paying per-job driver latency N times; the legs
+          // keep the batch's job group and all finish before the unpin
+          Datalake.inParallel(outputs.toSeq.map { o => () =>
+            val rows = df.where(col("_output") === o)
+            val payload = rows.schema("_value").dataType match {
+              case _: StructType => rows.select("_value.*")
+              case _             => rows.select(col("_value").as("value"))
             }
-          }.foreach(Await.result(_, Duration.Inf))
+            payload.write.mode("append").parquet(s"$basePath/$o")
+          })
+          ()
         } finally
           // free this micro-batch's pin deterministically even on a failed
           // trigger — a long-running stream must not wait on the

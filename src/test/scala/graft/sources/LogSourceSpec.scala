@@ -2,13 +2,14 @@ package graft.sources
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.connector.read.InputPartition
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
 /** The DSv2 log source: segment pruning against the sidecar index,
-  * batch-header seeking, header-only projection, and decode parity of
-  * key/value bytes. */
+  * packing segments into tasks, batch-header seeking, header-only
+  * projection, and decode parity of key/value bytes. */
 class LogSourceSpec extends SparkSpec {
 
   // 2 partitions x 2 segments x (2 batches of 3 records)
@@ -211,9 +212,9 @@ class LogSourceSpec extends SparkSpec {
       s"""{"path":"$seg","partition":0,"base_offset":0,"last_offset":2002,""" +
         s""""min_ts":100,"max_ts":902}"""))
     // window hits only the first real batch → everything else is seeked past
-    val part = LogInputPartition(
+    val part = LogInputPartition(Seq(LogSource.SegmentRead(
       LogSource.parseIndex(dir.toString).head,
-      LogSource.Bounds(None, Long.MinValue, 5L, Long.MinValue, Long.MaxValue))
+      LogSource.Bounds(None, Long.MinValue, 5L, Long.MinValue, Long.MaxValue))))
     val reader = new LogPartitionReader(part,
       Seq("partition", "offset", "timestamp", "key", "value"))
     val got = scala.collection.mutable.ArrayBuffer.empty[Long]
@@ -323,9 +324,9 @@ class LogSourceSpec extends SparkSpec {
     // reader-level: a limited reader emits exactly `limit` rows and
     // stops walking headers (bytesFetched stays below the full segment)
     val seg = LogSource.parseIndex(root).head
-    val r = new LogPartitionReader(LogInputPartition(seg,
+    val r = new LogPartitionReader(LogInputPartition(Seq(LogSource.SegmentRead(seg,
       LogSource.Bounds(None, Long.MinValue, Long.MaxValue,
-        Long.MinValue, Long.MaxValue), limit = 2),
+        Long.MinValue, Long.MaxValue))), limit = 2),
       Seq("partition", "offset"))
     var n = 0
     while (r.next()) n += 1
@@ -339,9 +340,9 @@ class LogSourceSpec extends SparkSpec {
     // projection the reader must parse records (rowOf's -1 sentinel is
     // guarded by a require on the fast path), so every ts is real
     val seg = LogSource.parseIndex(root).head
-    val r = new LogPartitionReader(LogInputPartition(seg,
+    val r = new LogPartitionReader(LogInputPartition(Seq(LogSource.SegmentRead(seg,
       LogSource.Bounds(None, Long.MinValue, Long.MaxValue,
-        Long.MinValue, Long.MaxValue)),
+        Long.MinValue, Long.MaxValue)))),
       Seq("offset", "timestamp"))
     val ts = scala.collection.mutable.ArrayBuffer.empty[Long]
     while (r.next()) ts += r.get().getLong(1)
@@ -360,5 +361,126 @@ class LogSourceSpec extends SparkSpec {
     assert(mixed.count() === 1)
     assert(mixed.queryExecution.executedPlan.toString
       .contains("segments=2/4"))
+  }
+
+  /** Writes `segs` segments of `perSeg` records (batches of 3) for each
+    * partition, from offset `from`; returns their index lines. */
+  private def writeSegments(dir: String, partitions: Seq[Int], segs: Int,
+      perSeg: Int, from: Long = 0L, valueBytes: Int = 0): Seq[String] =
+    for (p <- partitions; s <- 0 until segs) yield
+      LogSource.writeSegment(dir, p, (0 until perSeg).map { i =>
+        val o = from + s * perSeg + i
+        (o, 1000L * p + o, s"k$p-$o".getBytes("UTF-8"),
+          (s"v$p-$o" + "x" * valueBytes).getBytes("UTF-8"))
+      }, batchRecords = 3)
+
+  // 4 partitions x 16 segments x (2 batches of 3 records)
+  private lazy val manySegments: String = {
+    val dir = Files.createTempDirectory("logsource_packed").toString
+    LogSource.writeIndex(dir, writeSegments(dir, 0 until 4, segs = 16, perSeg = 6))
+    dir
+  }
+
+  private def readsOf(parts: Array[InputPartition]): Seq[Seq[LogSource.SegmentRead]] =
+    parts.toSeq.map(_.asInstanceOf[LogInputPartition].reads)
+
+  private def withConfs[T](kvs: (String, String)*)(body: => T): T = {
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally kvs.foreach { case (k, _) => spark.conf.unset(k) }
+  }
+
+  test("packing: 64 tiny segments plan fewer tasks than segments, each segment once in index order") {
+    val parts = new LogScanBuilder(manySegments).build().asInstanceOf[LogScan]
+      .planInputPartitions()
+    assert(parts.length > 1 && parts.length < 64, parts.length)
+    assert(readsOf(parts).flatten.map(_.segment) === LogSource.parseIndex(manySegments))
+  }
+
+  test("packing: collect() without orderBy returns every row, each partition's in offset order") {
+    val rows = spark.read.format("graftlog").option("path", manySegments).load()
+      .select(col("partition"), col("offset"), col("timestamp"),
+        col("key").cast("string"), col("value").cast("string"))
+      .collect().map(_.toSeq).toSeq
+    // index order: partition by partition, each in offset order
+    val expected = for (p <- 0 until 4; o <- 0L until 96L)
+      yield Seq(p, o, 1000L * p + o, s"k$p-$o", s"v$p-$o")
+    assert(rows === expected)
+  }
+
+  test("packing: a segment larger than the split size gets a task of its own") {
+    val dir = Files.createTempDirectory("logsource_big").toString
+    val small1 = writeSegments(dir, Seq(0), segs = 3, perSeg = 3)
+    val big = writeSegments(dir, Seq(0), segs = 1, perSeg = 6, from = 9,
+      valueBytes = 2048)
+    val small2 = writeSegments(dir, Seq(0), segs = 3, perSeg = 3, from = 15)
+    LogSource.writeIndex(dir, small1 ++ big ++ small2)
+    val bigPath = LogSource.parseIndex(dir).find(_.baseOffset == 9).get.path
+    val parts = withConfs("spark.sql.files.maxPartitionBytes" -> "4096",
+        "spark.sql.files.openCostInBytes" -> "64") {
+      new LogScanBuilder(dir).build().asInstanceOf[LogScan].planInputPartitions()
+    }
+    val reads = readsOf(parts)
+    assert(reads.flatten.map(_.segment) === LogSource.parseIndex(dir))
+    assert(reads.filter(_.exists(_.segment.path == bigPath)).map(_.size) === Seq(1))
+    assert(parts.length < 7, reads.map(_.map(_.segment.baseOffset)))
+  }
+
+  test("packing: a pushed limit(3) over one packed task returns 3 rows and stops early") {
+    val (parts, rows) = withConfs("spark.sql.files.minPartitionNum" -> "1") {
+      val b = new LogScanBuilder(root); b.pushLimit(3)
+      (b.build().asInstanceOf[LogScan].planInputPartitions(),
+        table.limit(3).select("partition", "offset").collect().map(_.toSeq).toSeq)
+    }
+    assert(parts.length === 1 && readsOf(parts).head.size === 4)
+    assert(rows === Seq(Seq(0, 0L), Seq(0, 1L), Seq(0, 2L)))
+    val r = new LogPartitionReader(parts.head.asInstanceOf[LogInputPartition],
+      Seq("partition", "offset", "value"))
+    var n = 0
+    while (r.next()) n += 1
+    r.close()
+    assert(n === 3)
+    // the first batch of the first segment holds the 3 rows: nothing
+    // past it is read
+    val first = LogSource.parseIndex(root).head.path
+    assert(r.bytesFetched < Files.size(java.nio.file.Paths.get(first)), r.bytesFetched)
+  }
+
+  test("packing: runtime partition filters drop segments before any task starts") {
+    import org.apache.spark.sql.sources.{In => SIn}
+    val scan = new LogScanBuilder(manySegments).build().asInstanceOf[LogScan]
+    scan.filter(Array[org.apache.spark.sql.sources.Filter](SIn("partition", Array(1, 3))))
+    val reads = readsOf(scan.planInputPartitions()).flatten
+    assert(reads.map(_.segment) ===
+      LogSource.parseIndex(manySegments).filter(s => s.partition == 1 || s.partition == 3))
+  }
+
+  test("packing: a streaming drain over many small segments reads each offset exactly once") {
+    val dir = Files.createTempDirectory("logsource_stream_packed").toString
+    val ckpt = Files.createTempDirectory("logsource_stream_packed_ckpt").toString
+    val lines = scala.collection.mutable.ArrayBuffer.empty[String]
+    val seen = scala.collection.mutable.ArrayBuffer.empty[(Int, Long)]
+    val tasks = scala.collection.mutable.ArrayBuffer.empty[Int]
+    def drain(): Unit =
+      spark.readStream.format("graftlog").option("path", dir).load()
+        .writeStream
+        .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+          val rows = df.select("partition", "offset").collect()
+          seen.synchronized {
+            seen ++= rows.map(r => (r.getInt(0), r.getLong(1)))
+            tasks += df.rdd.getNumPartitions
+          }
+          ()
+        }
+        .option("checkpointLocation", ckpt)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start().awaitTermination()
+    lines ++= writeSegments(dir, Seq(0, 1), segs = 20, perSeg = 3)
+    LogSource.writeIndex(dir, lines.toSeq)
+    drain()
+    lines ++= writeSegments(dir, Seq(0, 1), segs = 20, perSeg = 3, from = 60)
+    LogSource.writeIndex(dir, lines.toSeq)
+    drain()
+    assert(seen.toSeq.sorted === (for (p <- 0 until 2; o <- 0L until 120L) yield (p, o)))
+    assert(tasks.nonEmpty && tasks.forall(_ < 40), tasks)
   }
 }

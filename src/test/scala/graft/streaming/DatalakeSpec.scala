@@ -318,4 +318,34 @@ class DatalakeSpec extends SparkSpec {
     assert(spark.read.parquet(s"$base/evens").count() === 5)
     assert(spark.read.parquet(s"$base/odds").count() === 4)
   }
+
+  private def fanout(tag: String): (String, String, Transforms.TransformSpec[(String, String)]) = {
+    val in = tmp(s"${tag}_in"); val base = tmp(s"${tag}_base")
+    mkRows(0 until 9).select("offset", "timestamp", "v").write.mode("append").parquet(in)
+    (base, tmp(s"${tag}_ckpt"), Transforms.TransformSpec[(String, String)](tag,
+      Transforms.PathInput(in, inputSchema),
+      (r: org.apache.spark.sql.Row) =>
+        Seq((Seq("evens", "odds", "thirds")(r.getAs[Long]("offset").toInt % 3), r.getAs[String]("v")))))
+  }
+
+  test("multi-output transform: every job of a trigger carries the stream's job group") {
+    val (base, ckpt, spec) = fanout("fanout_group")
+    var runId = ""
+    val jobs = jobsDuring {
+      val q = Transforms.deployMulti(spark, spec, ckpt, base)
+      runId = q.runId.toString
+      q.awaitTermination()
+    }
+    assert(jobs.size >= 4) // outputs plus one write per table
+    assert(jobs.map(_.getProperty("spark.jobGroup.id")).toSet === Set(runId))
+  }
+
+  test("multi-output transform: a failing output fails the query only after the others committed") {
+    val (base, ckpt, spec) = fanout("fanout_fail")
+    Files.write(Paths.get(base, "evens"), Array[Byte](1)) // not a directory: its write fails
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      Transforms.deployMulti(spark, spec, ckpt, base).awaitTermination())
+    for (t <- Seq("odds", "thirds"))
+      assert(Files.exists(Paths.get(base, t, "_SUCCESS")), t)
+  }
 }
