@@ -31,30 +31,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Local-path checkpoint I/O without Hadoop's per-op subprocess forks
-      // (readlink/chmod/ls via Shell) — the NIO manager delegates back to
-      // the default for any non-file: scheme, so nothing changes on a
-      // real cluster. See NioCheckpointFileManager scaladoc.
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "graft.streaming.NioCheckpointFileManager")
-      // The checksum wrapper doubles checkpoint file ops to guard object-
-      // store corruption; a local POSIX fs gives those guarantees itself.
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      // Local data-plane writes without the per-file chmod fork (and the
-      // .crc sibling files) of Hadoop's default checksummed local FS —
-      // see ForklessLocalFileSystem scaladoc. Only registered in these
-      // local session builders; cluster schemes (hdfs/s3) are untouched.
-      .config("spark.hadoop.fs.file.impl",
-        "graft.streaming.ForklessLocalFileSystem")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpusFromEnv(4))
     // Optional name filter (comma-separated, for local iteration only —
     // the driver's per-round run sets no filter and times every entry).
     val filter = sys.env.get("SPARK_GRAFT_BENCH_ONLY")

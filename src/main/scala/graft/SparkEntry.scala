@@ -106,20 +106,15 @@ object SparkEntry {
     * sets are k×queries rows, so collect-and-intersect beats the
     * count + join + count pattern that re-runs both plans. The two legs
     * are independent pipelines (the exact truth and the approximate
-    * method), so their collects run overlapped (guide §2.6) instead of
-    * paying the slower leg after the faster one. */
+    * method), so their collects run overlapped instead of paying the
+    * slower leg after the faster one. */
   private[graft] def recallOf(bf: => DataFrame, got: => DataFrame): (Long, Long) = {
     def pairs(df: DataFrame) = df.collect()
       .map(r => (String.valueOf(r.get(0)), String.valueOf(r.get(1)))).toSet
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
     // by-name legs: DataFrame CONSTRUCTION (including any eager pins the
-    // leg takes) happens inside the future too, so the full pipelines
+    // leg takes) happens inside the leg too, so the full pipelines
     // overlap, not just the final collects
-    val bF = Future { pairs(bf) }
-    val g = pairs(got)
-    val b = Await.result(bF, Duration.Inf)
+    val (b, g) = Overlap.both(pairs(bf), pairs(got))
     (b.size.toLong, b.intersect(g).size.toLong)
   }
 

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,32 +7,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional third arg: comma-separated name filter for fast iteration
     val only = args.lift(2).map(_.split(',').toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS); read as long, converted
-      // to micros in SparkEntry.events.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Local-path checkpoint I/O without Hadoop's per-op subprocess forks
-      // (readlink/chmod/ls via Shell) — the NIO manager delegates back to
-      // the default for any non-file: scheme, so nothing changes on a
-      // real cluster. See NioCheckpointFileManager scaladoc.
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "graft.streaming.NioCheckpointFileManager")
-      // The checksum wrapper doubles checkpoint file ops to guard object-
-      // store corruption; a local POSIX fs gives those guarantees itself.
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      // Local data-plane writes without the per-file chmod fork (and the
-      // .crc sibling files) of Hadoop's default checksummed local FS —
-      // see ForklessLocalFileSystem scaladoc. Only registered in these
-      // local session builders; cluster schemes (hdfs/s3) are untouched.
-      .config("spark.hadoop.fs.file.impl",
-        "graft.streaming.ForklessLocalFileSystem")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpusFromEnv(4))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

@@ -1,5 +1,6 @@
 package graft.analytics
 
+import graft.{Overlap, Pins}
 import graft.Pins._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -228,34 +229,33 @@ object CleanPipeline {
       .select(col("doc_id"), col("keep").as("__rk"))
     // The bucket table (LM train + two-phase rank lineage) is needed only
     // by the FINAL funnel aggregate, not by the gate/dedup chain — pin it
-    // in an overlapped job (guide §2.6) and join it late, instead of
+    // overlapped with that chain and join it late, instead of
     // serializing its materialization in front of the whole chain. The
     // reorder is row-identical BECAUSE buckets cover every doc with
     // exactly one row (perplexityBuckets ranks the full corpus,
     // unscorable docs sink to the tail); a partial-coverage bucket table
     // would change which docs enter the dedup stage, so that coverage is
     // a contract of this function, not an incidental property.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val bkF = Future { buckets.select(col("doc_id"), col("bucket")).pinned() }
-    // The flag table is consumed by THREE actions (the shingle
-    // materialization, the components' edge count, the final funnel
-    // aggregate) — checkpoint it so the rule batteries evaluate once.
-    val flags = base.join(g, "doc_id").join(r, "doc_id")
-      .pinned()
-    // FineWeb dedups AFTER the quality gates: only rule survivors shingle
-    val survivors = flags.where(col("__gk") && col("__rk"))
-      .select(col("doc_id"), col("__text"))
-    val sh = Dedup.shingled(survivors, col("doc_id"), col("__text"), shingleN)
-      .pinned()
-    val cands = Dedup.lshCandidates(
-      Dedup.minHashSignaturesParity(sh, k), k, bands, maxBucket)
-    val pairs = Dedup.verifyJaccard(cands, sh)
-      .where(col("jaccard") >= threshold).select("doc_a", "doc_b")
-    val comp = Dedup.connectedComponents(pairs, survivors.select("doc_id"))
-    val lab = flags.join(comp, Seq("doc_id"), "left")
-      .join(Await.result(bkF, Duration.Inf), "doc_id")
+    val (bk, labeled) = Overlap.both(
+      buckets.select(col("doc_id"), col("bucket")).pinned(), {
+      // The flag table is consumed by THREE actions (the shingle
+      // materialization, the components' edge count, the final funnel
+      // aggregate) — pin it so the rule batteries evaluate once.
+      val flags = base.join(g, "doc_id").join(r, "doc_id")
+        .pinned()
+      // FineWeb dedups AFTER the quality gates: only rule survivors shingle
+      val survivors = flags.where(col("__gk") && col("__rk"))
+        .select(col("doc_id"), col("__text"))
+      val sh = Dedup.shingled(survivors, col("doc_id"), col("__text"), shingleN)
+        .pinned()
+      val cands = Dedup.lshCandidates(
+        Dedup.minHashSignaturesParity(sh, k), k, bands, maxBucket)
+      val pairs = Dedup.verifyJaccard(cands, sh)
+        .where(col("jaccard") >= threshold).select("doc_a", "doc_b")
+      flags.join(Dedup.connectedComponents(pairs, survivors.select("doc_id")),
+        Seq("doc_id"), "left")
+    })
+    val lab = labeled.join(bk, "doc_id")
     val kept = col("__gk") && col("__rk") && col("cluster_id") === col("doc_id")
     val fin = kept && col("bucket") =!= "tail"
     lab.agg(
@@ -293,64 +293,38 @@ object CleanPipeline {
       minTokens: Int, shingleN: Int, k: Int, bands: Int,
       threshold: Double, maxBucket: Int = 1000,
       prepare: DataFrame => DataFrame = identity):
-      org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.streaming.Trigger
-    val q = batches.writeStream
-      .option("checkpointLocation", ckptDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        // Null-safe gates: a null URL fails CLOSED (blocked — the gate
-        // cannot vouch for it) and a null page extracts to empty text
-        // (low-quality). Without the coalesces the gate columns go
-        // null, the doc is excluded from `eligible` but still written,
-        // and the verdict ladder emits NULL instead of a stage label.
-        val staged = prepare(batch).select(col("doc_id"), col("url"), col("html"))
-          .withColumn("__blocked", when(col("url").isNull, lit(true))
-            .otherwise(Dedup.urlBlocked(col("url"), blockedDomains, blockedPathWords)))
-          .withColumn("text", TextAnalysis.htmlToText(coalesce(col("html"), lit(""))))
-          .withColumn("__lowq",
-            TextAnalysis.tokenCount(col("text")) < minTokens)
-          .pinned()
-        val eligible = staged.where(!col("__blocked") && !col("__lowq"))
-          .select("doc_id", "text")
-        val (verdicts0, batchBands) = Dedup.incrementalBatchStep(s, stateDir,
-          eligible, batchId, sign, shingleN, k, bands, threshold, maxBucket)
-        // Pin the ladder-merged verdicts: the judge DAG evaluates ONCE and
-        // the output write, the accepted-id cut and both state writes read
-        // the pin — the old spelling re-READ the written parquet once per
-        // state write. Output write and state growth are then independent
-        // jobs over pinned inputs, run overlapped (guide §2.6).
-        val ladder = staged.select(col("doc_id"), col("__blocked"), col("__lowq"))
-          .join(verdicts0.withColumnRenamed("verdict", "__dv"), Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            when(col("__blocked"), lit("blocked_url"))
-              .when(col("__lowq"), lit("low_quality"))
-              .otherwise(col("__dv")).as("verdict"),
-            when(!col("__blocked") && !col("__lowq"), col("dup_of")).as("dup_of"))
-          .pinned()
-        try {
-          val accepted = ladder.where(col("verdict") === "new").select("doc_id")
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.duration.Duration
-          import scala.concurrent.ExecutionContext.Implicits.global
-          val outW = Future {
-            ladder.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-          }
-          Dedup.growIncrementalState(stateDir, batchId, eligible, batchBands, accepted)
-          Await.result(outW, Duration.Inf)
-        } finally
-          // free this micro-batch's pins deterministically even on a failed
-          // trigger — a long-running stream must not wait on the
-          // ContextCleaner (cluster path; the local checkpoint path is
-          // GC-freed either way)
-          graft.Pins.unpin(staged, batchBands, ladder)
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    q
-  }
+      org.apache.spark.sql.streaming.StreamingQuery =
+    Pins.eachBatch(batches, ckptDir) { (scope, batch, batchId) =>
+      // Null-safe gates: a null URL fails CLOSED (blocked — the gate
+      // cannot vouch for it) and a null page extracts to empty text
+      // (low-quality). Without the coalesces the gate columns go
+      // null, the doc is excluded from `eligible` but still written,
+      // and the verdict ladder emits NULL instead of a stage label.
+      val staged = scope.pin(prepare(batch).select(col("doc_id"), col("url"), col("html"))
+        .withColumn("__blocked", when(col("url").isNull, lit(true))
+          .otherwise(Dedup.urlBlocked(col("url"), blockedDomains, blockedPathWords)))
+        .withColumn("text", TextAnalysis.htmlToText(coalesce(col("html"), lit(""))))
+        .withColumn("__lowq",
+          TextAnalysis.tokenCount(col("text")) < minTokens))
+      val eligible = staged.where(!col("__blocked") && !col("__lowq"))
+        .select("doc_id", "text")
+      val (verdicts0, batchBands) = Dedup.incrementalBatchStep(scope, stateDir,
+        eligible, batchId, sign, shingleN, k, bands, threshold, maxBucket)
+      // Pin the ladder-merged verdicts: the judge DAG evaluates ONCE and
+      // the output write, the accepted-id cut and both state writes read
+      // the pin.
+      val ladder = scope.pin(staged.select(col("doc_id"), col("__blocked"), col("__lowq"))
+        .join(verdicts0.withColumnRenamed("verdict", "__dv"), Seq("doc_id"), "left")
+        .select(col("doc_id"),
+          when(col("__blocked"), lit("blocked_url"))
+            .when(col("__lowq"), lit("low_quality"))
+            .otherwise(col("__dv")).as("verdict"),
+          when(!col("__blocked") && !col("__lowq"), col("dup_of")).as("dup_of")))
+      val accepted = ladder.where(col("verdict") === "new").select("doc_id")
+      Overlap.both(
+        ladder.write.mode("overwrite").parquet(s"$outDir/batch=$batchId"),
+        Dedup.growIncrementalState(stateDir, batchId, eligible, batchBands, accepted))
+    }
 
   /**
    * [[crawlStream]] fed RAW WARC FILES — the literal CommonCrawl

@@ -1,7 +1,8 @@
 package graft.analytics
 
+import graft.{Overlap, Pins}
 import graft.Pins._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /**
@@ -435,30 +436,26 @@ object Dedup {
     // twice (corpus) / three times (batch). The band index is the
     // operator's own persistable artifact (the stream twin reads it
     // from parquet state); in the from-scratch spelling this pins it
-    // for the run instead.
-    // the two pins are independent signature pipelines — overlap them
-    // (guide §2.6) instead of materializing corpus then batch in sequence
-    val (corpusBands, batchBands) = {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val cF = Future { bandTable(corpusSig, k, bands).pinned() }
-      val b = bandTable(batchSig, k, bands).pinned()
-      (Await.result(cF, Duration.Inf), b)
-    }
+    // for the run instead. The two pins are independent signature
+    // pipelines, so they materialize overlapped.
+    val (corpusBands, batchBands) = Overlap.both(
+      bandTable(corpusSig, k, bands).pinned(),
+      bandTable(batchSig, k, bands).pinned())
     judgeAgainstIndex(
       capBuckets(corpusBands, Seq("band_id", "band_hash"), maxBucket),
-      batchBands, corpusDocs, batchDocs, shingleN, threshold, maxBucket)
+      batchBands, corpusDocs, batchDocs, shingleN, threshold, maxBucket, _.pinned())
   }
 
   /** The judgment core shared by [[incrementalNearDups]] and
     * [[incrementalNearDupsStream]]: probe an already-capped corpus
     * band index with a batch band table, verify candidates by exact
     * Jaccard over candidate-scoped in-row re-shingling, and emit one
-    * verdict row per batch doc. */
+    * verdict row per batch doc. `pin` materializes its two intermediates
+    * — a trigger's scope in the stream, so they are freed with it. */
   private[analytics] def judgeAgainstIndex(corpusIdx: DataFrame,
       batchBands: DataFrame, corpusDocs: DataFrame, batchDocs: DataFrame,
-      shingleN: Int, threshold: Double, maxBucket: Int): DataFrame = {
+      shingleN: Int, threshold: Double, maxBucket: Int,
+      pin: DataFrame => DataFrame): DataFrame = {
     val vsCorpus = batchBands.alias("b")
       .join(corpusIdx.alias("c"),
         col("b.band_id") === col("c.band_id") &&
@@ -471,21 +468,17 @@ object Dedup {
     // Candidate pairs are batch-scale (a vanishing fraction of the
     // corpus) and feed BOTH the semi-join doc cut and the verify join;
     // materialize once so the signature/banding DAG runs once, not
-    // per consumer. (r17 re-measured the un-pinned spelling: locally
-    // within noise — the duplicate subtrees run concurrently inside the
-    // one verdict action — but at scale the duplication is 2x the index
-    // probe, so the pin stays.)
-    val pairs = vsCorpus.unionByName(vsBatch).pinned()
+    // per consumer.
+    val pairs = pin(vsCorpus.unionByName(vsBatch))
     val candDocs = pairs.select(col("doc_a").as("doc_id"))
       .union(pairs.select(col("doc_b").as("doc_id"))).distinct()
     // Candidate-scale like pairs, and consumed twice (the set_a and
     // set_b joins) — materialize so the doc-table scans run once.
-    val sets = corpusDocs.select(col("doc_id"), col("text"))
+    val sets = pin(corpusDocs.select(col("doc_id"), col("text"))
       .unionByName(batchDocs.select(col("doc_id"), col("text")))
       .join(candDocs, Seq("doc_id"), "left_semi")
       .select(col("doc_id"),
-        array_distinct(shingles(col("text"), shingleN)).as("sset"))
-      .pinned()
+        array_distinct(shingles(col("text"), shingleN)).as("sset")))
     val verified = pairs
       .join(sets.select(col("doc_id").as("doc_a"), col("sset").as("set_a")), "doc_a")
       .join(sets.select(col("doc_id").as("doc_b"), col("sset").as("set_b")), "doc_b")
@@ -532,19 +525,12 @@ object Dedup {
     * initial corpus: its band index and doc texts land as the `batch=-1`
     * slice of the two append-only state tables. */
   def initIncrementalState(corpusDocs: DataFrame, stateDir: String,
-      sign: DataFrame => DataFrame, k: Int, bands: Int): Unit = {
-    // two independent seed writes — overlap them (guide §2.6)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val bandsW = Future {
+      sign: DataFrame => DataFrame, k: Int, bands: Int): Unit =
+    Overlap.both(
       bandTable(sign(corpusDocs), k, bands)
-        .write.mode("overwrite").parquet(s"$stateDir/bands/batch=-1")
-    }
-    corpusDocs.select(col("doc_id"), col("text"))
-      .write.mode("overwrite").parquet(s"$stateDir/docs/batch=-1")
-    Await.result(bandsW, Duration.Inf)
-  }
+        .write.mode("overwrite").parquet(s"$stateDir/bands/batch=-1"),
+      corpusDocs.select(col("doc_id"), col("text"))
+        .write.mode("overwrite").parquet(s"$stateDir/docs/batch=-1"))
 
   /**
    * Continuous incremental near-dup dedup — [[incrementalNearDups]] as
@@ -574,66 +560,37 @@ object Dedup {
   def incrementalNearDupsStream(batches: DataFrame, stateDir: String,
       outDir: String, ckptDir: String, sign: DataFrame => DataFrame,
       shingleN: Int, k: Int, bands: Int, threshold: Double,
-      maxBucket: Int = 1000): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.streaming.Trigger
-    val q = batches.writeStream
-      .option("checkpointLocation", ckptDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val batchDocs = batch.select(col("doc_id"), col("text"))
-          .pinned()
-        val (verdicts0, batchBands) = incrementalBatchStep(s, stateDir,
-          batchDocs, batchId, sign, shingleN, k, bands, threshold, maxBucket)
-        // Pin the verdicts: the judge DAG evaluates ONCE, and the output
-        // write, the accepted-id cut and both state writes all read the
-        // pin — the old spelling wrote the verdicts, then re-READ the
-        // written parquet once per state write (two extra scans and a
-        // serializing read-back between every micro-batch's jobs).
-        val verdicts = verdicts0.pinned()
-        try {
-          val accepted = verdicts.where(col("verdict") === "new").select("doc_id")
-          // The output write and the state growth are independent jobs over
-          // pinned inputs — overlap them (guide §2.6) instead of paying the
-          // per-job driver latency three times in sequence per micro-batch.
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.duration.Duration
-          import scala.concurrent.ExecutionContext.Implicits.global
-          val outW = Future {
-            verdicts.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-          }
-          growIncrementalState(stateDir, batchId, batchDocs, batchBands, accepted)
-          Await.result(outW, Duration.Inf)
-        } finally
-          // free this micro-batch's pins deterministically even on a failed
-          // trigger — a long-running stream must not wait on the
-          // ContextCleaner (cluster path; the local checkpoint path is
-          // GC-freed either way)
-          graft.Pins.unpin(batchDocs, batchBands, verdicts)
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    q
-  }
+      maxBucket: Int = 1000): org.apache.spark.sql.streaming.StreamingQuery =
+    Pins.eachBatch(batches, ckptDir) { (scope, batch, batchId) =>
+      val batchDocs = scope.pin(batch.select(col("doc_id"), col("text")))
+      val (verdicts0, batchBands) = incrementalBatchStep(scope, stateDir,
+        batchDocs, batchId, sign, shingleN, k, bands, threshold, maxBucket)
+      // Pin the verdicts: the judge DAG evaluates ONCE, and the output
+      // write, the accepted-id cut and both state writes all read the pin.
+      val verdicts = scope.pin(verdicts0)
+      val accepted = verdicts.where(col("verdict") === "new").select("doc_id")
+      Overlap.both(
+        verdicts.write.mode("overwrite").parquet(s"$outDir/batch=$batchId"),
+        growIncrementalState(stateDir, batchId, batchDocs, batchBands, accepted))
+    }
 
   /** One micro-batch of the growing-index dedup: judge `batchDocs`
     * (a pinned `(doc_id, text)` table) against the standing state as
-    * of `batchId`. Returns (verdict rows, the batch's pinned band
-    * table — needed by [[growIncrementalState]]). Shared by
-    * [[incrementalNearDupsStream]] and the composed crawl pipeline
-    * ([[CleanPipeline.crawlStream]]), which wraps the verdicts in its
-    * own stage ladder. */
-  private[analytics] def incrementalBatchStep(s: SparkSession,
+    * of `batchId`. Returns (verdict rows, the batch's band table —
+    * needed by [[growIncrementalState]]); the band table is pinned in
+    * `scope`, which frees it. Shared by [[incrementalNearDupsStream]]
+    * and the composed crawl pipeline ([[CleanPipeline.crawlStream]]),
+    * which wraps the verdicts in its own stage ladder. */
+  private[analytics] def incrementalBatchStep(scope: Pins.Scope,
       stateDir: String, batchDocs: DataFrame, batchId: Long,
       sign: DataFrame => DataFrame, shingleN: Int, k: Int, bands: Int,
       threshold: Double, maxBucket: Int): (DataFrame, DataFrame) = {
+    val s = batchDocs.sparkSession
     val priorBands = s.read.parquet(s"$stateDir/bands")
       .where(col("batch") < batchId).drop("batch")
     val priorDocs = s.read.parquet(s"$stateDir/docs")
       .where(col("batch") < batchId).drop("batch")
-    val batchBands = bandTable(sign(batchDocs), k, bands)
-      .pinned()
+    val batchBands = scope.pin(bandTable(sign(batchDocs), k, bands))
     // probe-scoped cap: count members only in buckets this batch
     // touches — identical verdicts (un-probed buckets yield no
     // candidates), batch-scale work against an index of any size.
@@ -642,7 +599,7 @@ object Dedup {
       Seq("band_id", "band_hash"), "left_semi")
     val corpusIdx = capBuckets(probed, Seq("band_id", "band_hash"), maxBucket)
     (judgeAgainstIndex(corpusIdx, batchBands, priorDocs, batchDocs,
-      shingleN, threshold, maxBucket), batchBands)
+      shingleN, threshold, maxBucket, scope.pin), batchBands)
   }
 
   /** Admit `acceptedIds` into the standing state as `batch=batchId`
@@ -651,18 +608,12 @@ object Dedup {
     * so a micro-batch pays the per-job driver latency once, not twice. */
   private[analytics] def growIncrementalState(stateDir: String,
       batchId: Long, batchDocs: DataFrame, batchBands: DataFrame,
-      acceptedIds: DataFrame): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val docsW = Future {
+      acceptedIds: DataFrame): Unit =
+    Overlap.both(
       batchDocs.join(acceptedIds, Seq("doc_id"), "left_semi")
-        .write.mode("overwrite").parquet(s"$stateDir/docs/batch=$batchId")
-    }
-    batchBands.join(acceptedIds, Seq("doc_id"), "left_semi")
-      .write.mode("overwrite").parquet(s"$stateDir/bands/batch=$batchId")
-    Await.result(docsW, Duration.Inf)
-  }
+        .write.mode("overwrite").parquet(s"$stateDir/docs/batch=$batchId"),
+      batchBands.join(acceptedIds, Seq("doc_id"), "left_semi")
+        .write.mode("overwrite").parquet(s"$stateDir/bands/batch=$batchId"))
 
   /**
    * Exact n-gram Jaccard all-pairs above a threshold, via inverted index:

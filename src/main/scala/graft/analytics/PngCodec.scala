@@ -1,5 +1,6 @@
 package graft.analytics
 
+import graft.{Overlap, Pins}
 import graft.Pins._
 import java.io.ByteArrayOutputStream
 import java.util.zip.{CRC32, Deflater, Inflater}
@@ -375,95 +376,69 @@ object PngCodec {
    */
   def imageFunnelStream(batches: DataFrame, stateDir: String, outDir: String,
       ckptDir: String, maxHamming: Int = 3, maxBucket: Int = 10000,
-      jpegMinQuality: Int = 50): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.streaming.Trigger
-    val q = batches.writeStream
-      .option("checkpointLocation", ckptDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        implicit val s: SparkSession = batch.sparkSession
-        import s.implicits._
-        val media = batch.select(col("doc_id"), col("mime"), col("media"))
-          .as[MediaRecord]
-        // ONE decode per image (gate + hash together), pinned once;
-        // JPEGs take the pre-decode DQT quality gate (round 17 — batch
-        // funnel parity via the shared gradeMedia kernel): sub-quality
-        // rejects, keepers are `new` but never hash and never join the
-        // index (no pixels to hash)
-        val gh = gradeMedia(media, jpegMinQuality).toDF().pinned()
-        val quality = gh.select(col("doc_id"), col("keep"))
-        val hashes = gh.where(col("keep") && !col("is_jpeg"))
-          .select("doc_id", "b0", "b1", "b2", "b3")
-        def banded(h: DataFrame): DataFrame =
-          h.select(col("doc_id"), posexplode(array(
-            col("b0"), col("b1"), col("b2"), col("b3"))).as(Seq("band_id", "bv")))
-        val batchBanded = banded(hashes)
-        val prior = s.read.parquet(s"$stateDir/hashes")
-          .where(col("batch") < batchId).drop("batch")
-        // probe-scoped: only standing-index rows in buckets this batch
-        // touches enter the join (verdict-identical; batch-scale work)
-        val priorBanded = Dedup.capBuckets(
-          banded(prior).join(
-            batchBanded.select("band_id", "bv").distinct(),
-            Seq("band_id", "bv"), "left_semi"),
-          Seq("band_id", "bv"), maxBucket)
-        val candPrior = priorBanded.select(col("doc_id").as("img_a"),
-            col("band_id"), col("bv"))
-          .join(batchBanded.select(col("doc_id").as("img_b"),
-            col("band_id"), col("bv")), Seq("band_id", "bv"))
-        val candIntra = batchBanded.alias("a").join(batchBanded.alias("b"),
-            col("a.band_id") === col("b.band_id") && col("a.bv") === col("b.bv") &&
-              col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("img_a"), col("b.doc_id").as("img_b"))
-        val cand = candPrior.select("img_a", "img_b")
-          .unionByName(candIntra).distinct()
-        val all = prior.unionByName(hashes)
-        val pa = all.select(col("doc_id").as("img_a"), col("b0").as("a0"),
-          col("b1").as("a1"), col("b2").as("a2"), col("b3").as("a3"))
-        val pb = hashes.select(col("doc_id").as("img_b"), col("b0").as("c0"),
-          col("b1").as("c1"), col("b2").as("c2"), col("b3").as("c3"))
-        val dupOf = cand.join(pa, "img_a").join(pb, "img_b")
-          .where((bit_count(col("a0").bitwiseXOR(col("c0"))) +
-            bit_count(col("a1").bitwiseXOR(col("c1"))) +
-            bit_count(col("a2").bitwiseXOR(col("c2"))) +
-            bit_count(col("a3").bitwiseXOR(col("c3")))) <= maxHamming)
-          .groupBy(col("img_b").as("doc_id"))
-          .agg(min(col("img_a")).as("dup_of"))
-        // Pin the verdicts: the dup-judgment DAG evaluates ONCE and both
-        // the output write and the index growth read the pin — the old
-        // spelling re-READ the written parquet to recover the admitted
-        // ids. The two writes are then independent jobs over pinned
-        // inputs, run overlapped (guide §2.6).
-        val verdicts = quality.join(dupOf, Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            when(!col("keep"), lit("low_quality"))
-              .when(col("dup_of").isNotNull, lit("dup"))
-              .otherwise(lit("new")).as("verdict"),
-            when(col("keep"), col("dup_of")).as("dup_of"))
-          .pinned()
-        try {
-          val admitted = verdicts.where(col("verdict") === "new").select("doc_id")
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.duration.Duration
-          import scala.concurrent.ExecutionContext.Implicits.global
-          val outW = Future {
-            verdicts.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-          }
-          hashes.join(admitted, "doc_id")
-            .write.mode("overwrite").parquet(s"$stateDir/hashes/batch=$batchId")
-          Await.result(outW, Duration.Inf)
-        } finally
-          // free this micro-batch's pins deterministically even on a failed
-          // trigger — a long-running stream must not wait on the
-          // ContextCleaner (cluster path; the local checkpoint path is
-          // GC-freed either way)
-          graft.Pins.unpin(gh, verdicts)
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    q
-  }
+      jpegMinQuality: Int = 50): org.apache.spark.sql.streaming.StreamingQuery =
+    Pins.eachBatch(batches, ckptDir) { (scope, batch, batchId) =>
+      implicit val s: SparkSession = batch.sparkSession
+      import s.implicits._
+      val media = batch.select(col("doc_id"), col("mime"), col("media"))
+        .as[MediaRecord]
+      // ONE decode per image (gate + hash together), pinned once;
+      // JPEGs take the pre-decode DQT quality gate (the batch funnel's
+      // gradeMedia kernel): sub-quality rejects, keepers are `new` but
+      // never hash and never join the index (no pixels to hash)
+      val gh = scope.pin(gradeMedia(media, jpegMinQuality).toDF())
+      val quality = gh.select(col("doc_id"), col("keep"))
+      val hashes = gh.where(col("keep") && !col("is_jpeg"))
+        .select("doc_id", "b0", "b1", "b2", "b3")
+      def banded(h: DataFrame): DataFrame =
+        h.select(col("doc_id"), posexplode(array(
+          col("b0"), col("b1"), col("b2"), col("b3"))).as(Seq("band_id", "bv")))
+      val batchBanded = banded(hashes)
+      val prior = s.read.parquet(s"$stateDir/hashes")
+        .where(col("batch") < batchId).drop("batch")
+      // probe-scoped: only standing-index rows in buckets this batch
+      // touches enter the join (verdict-identical; batch-scale work)
+      val priorBanded = Dedup.capBuckets(
+        banded(prior).join(
+          batchBanded.select("band_id", "bv").distinct(),
+          Seq("band_id", "bv"), "left_semi"),
+        Seq("band_id", "bv"), maxBucket)
+      val candPrior = priorBanded.select(col("doc_id").as("img_a"),
+          col("band_id"), col("bv"))
+        .join(batchBanded.select(col("doc_id").as("img_b"),
+          col("band_id"), col("bv")), Seq("band_id", "bv"))
+      val candIntra = batchBanded.alias("a").join(batchBanded.alias("b"),
+          col("a.band_id") === col("b.band_id") && col("a.bv") === col("b.bv") &&
+            col("a.doc_id") < col("b.doc_id"))
+        .select(col("a.doc_id").as("img_a"), col("b.doc_id").as("img_b"))
+      val cand = candPrior.select("img_a", "img_b")
+        .unionByName(candIntra).distinct()
+      val all = prior.unionByName(hashes)
+      val pa = all.select(col("doc_id").as("img_a"), col("b0").as("a0"),
+        col("b1").as("a1"), col("b2").as("a2"), col("b3").as("a3"))
+      val pb = hashes.select(col("doc_id").as("img_b"), col("b0").as("c0"),
+        col("b1").as("c1"), col("b2").as("c2"), col("b3").as("c3"))
+      val dupOf = cand.join(pa, "img_a").join(pb, "img_b")
+        .where((bit_count(col("a0").bitwiseXOR(col("c0"))) +
+          bit_count(col("a1").bitwiseXOR(col("c1"))) +
+          bit_count(col("a2").bitwiseXOR(col("c2"))) +
+          bit_count(col("a3").bitwiseXOR(col("c3")))) <= maxHamming)
+        .groupBy(col("img_b").as("doc_id"))
+        .agg(min(col("img_a")).as("dup_of"))
+      // Pin the verdicts: the dup-judgment DAG evaluates ONCE and both
+      // the output write and the index growth read the pin.
+      val verdicts = scope.pin(quality.join(dupOf, Seq("doc_id"), "left")
+        .select(col("doc_id"),
+          when(!col("keep"), lit("low_quality"))
+            .when(col("dup_of").isNotNull, lit("dup"))
+            .otherwise(lit("new")).as("verdict"),
+          when(col("keep"), col("dup_of")).as("dup_of")))
+      val admitted = verdicts.where(col("verdict") === "new").select("doc_id")
+      Overlap.both(
+        verdicts.write.mode("overwrite").parquet(s"$outDir/batch=$batchId"),
+        hashes.join(admitted, "doc_id")
+          .write.mode("overwrite").parquet(s"$stateDir/hashes/batch=$batchId"))
+    }
 
   /** Decoded-pixel summary row: closed-form checkable stats per image. */
   final case class PngStats(doc_id: Long, width: Int, height: Int,

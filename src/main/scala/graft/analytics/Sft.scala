@@ -1,6 +1,6 @@
 package graft.analytics
 
-import graft.Pins._
+import graft.{Overlap, Pins}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -228,63 +228,38 @@ object Sft {
    * `outDir/batch=N`: (conv_id, verdict, dup_of).
    */
   def curateStream(batches: DataFrame, stateDir: String, outDir: String,
-      ckptDir: String, maxTurns: Int): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.streaming.Trigger
-    val q = batches.writeStream
-      .option("checkpointLocation", ckptDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val turns = batch.select("conv_id", "turn_idx", "role", "content")
-          .pinned()
-        val flags = validate(turns, maxTurns)
-          .select("conv_id", "ok").pinned()
-        val valid = turns.join(flags.where(col("ok")).select("conv_id"),
-          Seq("conv_id"))
-        val sigs = assistantSigs(valid).select("conv_id", "sig")
-          .pinned()
-        val prior = s.read.parquet(s"$stateDir/sigs")
-          .where(col("batch") < batchId)
-          .groupBy("sig").agg(min("conv_id").as("prior_conv"))
-        val batchMin = sigs.groupBy("sig").agg(min("conv_id").as("batch_min"))
-        val judged = sigs
-          .join(prior, Seq("sig"), "left")
-          .join(batchMin, Seq("sig"))
-          .select(col("conv_id"),
-            when(col("prior_conv").isNotNull, lit("dup_corpus"))
-              .when(col("conv_id") =!= col("batch_min"), lit("dup_batch"))
-              .otherwise(lit("new")).as("verdict"),
-            when(col("prior_conv").isNotNull, col("prior_conv"))
-              .when(col("conv_id") =!= col("batch_min"), col("batch_min"))
-              .otherwise(lit(null).cast("long")).as("dup_of"))
-        // Pin the verdicts: the judge DAG evaluates ONCE and both the
-        // output write and the index growth read the pin — the old
-        // spelling re-READ the written parquet to recover admitted ids.
-        // The two writes are then independent jobs over pinned inputs,
-        // run overlapped (guide §2.6); pins freed even on a failed
-        // trigger (a long-running stream must not wait on the
-        // ContextCleaner on the cluster path).
-        val invalid = flags.where(!col("ok")).select(col("conv_id"),
-          lit("invalid").as("verdict"), lit(null).cast("long").as("dup_of"))
-        val verdicts = judged.unionByName(invalid).pinned()
-        try {
-          val admitted = verdicts.where(col("verdict") === "new").select("conv_id")
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.duration.Duration
-          import scala.concurrent.ExecutionContext.Implicits.global
-          val outW = Future {
-            verdicts.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-          }
-          sigs.join(admitted, Seq("conv_id"), "left_semi")
-            .write.mode("overwrite").parquet(s"$stateDir/sigs/batch=$batchId")
-          Await.result(outW, Duration.Inf)
-        } finally graft.Pins.unpin(turns, flags, sigs, verdicts)
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    q
-  }
+      ckptDir: String, maxTurns: Int): org.apache.spark.sql.streaming.StreamingQuery =
+    Pins.eachBatch(batches, ckptDir) { (scope, batch, batchId) =>
+      val turns = scope.pin(batch.select("conv_id", "turn_idx", "role", "content"))
+      val flags = scope.pin(validate(turns, maxTurns).select("conv_id", "ok"))
+      val valid = turns.join(flags.where(col("ok")).select("conv_id"),
+        Seq("conv_id"))
+      val sigs = scope.pin(assistantSigs(valid).select("conv_id", "sig"))
+      val prior = batch.sparkSession.read.parquet(s"$stateDir/sigs")
+        .where(col("batch") < batchId)
+        .groupBy("sig").agg(min("conv_id").as("prior_conv"))
+      val batchMin = sigs.groupBy("sig").agg(min("conv_id").as("batch_min"))
+      val judged = sigs
+        .join(prior, Seq("sig"), "left")
+        .join(batchMin, Seq("sig"))
+        .select(col("conv_id"),
+          when(col("prior_conv").isNotNull, lit("dup_corpus"))
+            .when(col("conv_id") =!= col("batch_min"), lit("dup_batch"))
+            .otherwise(lit("new")).as("verdict"),
+          when(col("prior_conv").isNotNull, col("prior_conv"))
+            .when(col("conv_id") =!= col("batch_min"), col("batch_min"))
+            .otherwise(lit(null).cast("long")).as("dup_of"))
+      // Pin the verdicts: the judge DAG evaluates ONCE and both the
+      // output write and the index growth read the pin.
+      val invalid = flags.where(!col("ok")).select(col("conv_id"),
+        lit("invalid").as("verdict"), lit(null).cast("long").as("dup_of"))
+      val verdicts = scope.pin(judged.unionByName(invalid))
+      val admitted = verdicts.where(col("verdict") === "new").select("conv_id")
+      Overlap.both(
+        verdicts.write.mode("overwrite").parquet(s"$outDir/batch=$batchId"),
+        sigs.join(admitted, Seq("conv_id"), "left_semi")
+          .write.mode("overwrite").parquet(s"$stateDir/sigs/batch=$batchId"))
+    }
 
   /**
    * Preference-pair construction (the DPO/RLHF reward-data prep):

@@ -969,13 +969,10 @@ private[graft] object AdminRestScriptEntries {
       val m = new com.fasterxml.jackson.databind.ObjectMapper()
       def j(b: String) = m.readTree(b)
       // The two engine feeds are independent Spark pipelines that both end
-      // in a driver collect — overlap them (guide §2.6) instead of running
-      // the archive walk and the scrub sequentially before the script.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      // engine feed 1: tiered-storage manifest rows -> manifest JSON
-      val manByPartF = Future {
+      // in a driver collect — overlap them instead of running the archive
+      // walk and the scrub sequentially before the script.
+      val (manByPart, anomByPart) = graft.Overlap.both({
+        // engine feed 1: tiered-storage manifest rows -> manifest JSON
         val localDir = cleanupOnExit(java.nio.file.Files
           .createTempDirectory("adm_cs_local")).toString
         val archDir = cleanupOnExit(java.nio.file.Files
@@ -997,9 +994,8 @@ private[graft] object AdminRestScriptEntries {
             seg.put("size_bytes", 64L * r.getLong(4))
             p -> m.writeValueAsString(o)
           }.toMap
-      }
-      // engine feed 2: scrubber anomaly counters per partition
-      val anomByPartF = Future {
+      }, {
+        // engine feed 2: scrubber anomaly counters per partition
         graft.log.Scrubber.scrub(
             scrubManifestFx(s, dir).drop("c"),
             scrubObjectsFx(s, dir), scrubSpilloverFx(s))
@@ -1016,9 +1012,7 @@ private[graft] object AdminRestScriptEntries {
                 (by.values.sum - by.getOrElse("missing_segment", 0L) -
                   by.getOrElse("missing_spillover_manifest", 0L)))
           }
-      }
-      val manByPart = Await.result(manByPartF, Duration.Inf)
-      val anomByPart = Await.result(anomByPartF, Duration.Inf)
+      })
       // engine feed 3: manual cache trim over the cache-file fixture
       var lastTrim = (0L, 0L)
       val srv = new AdminApi.Server(nodeIds = Seq(0, 1, 2),

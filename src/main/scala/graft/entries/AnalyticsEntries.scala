@@ -61,26 +61,21 @@ private[graft] object AnalyticsEntries {
 
   /** Stage dataframes as single parquet files with increasing mtimes so
     * `maxFilesPerTrigger = 1` delivers them as ordered micro-batches. */
-  private[entries] def stageOrderedBatches(prefix: String, batches: Seq[DataFrame]): String = {
+  private[graft] def stageOrderedBatches(prefix: String, batches: Seq[DataFrame]): String = {
     import java.nio.file.Files
     import java.nio.file.attribute.FileTime
     val inDir = cleanupOnExit(Files.createTempDirectory(s"${prefix}_in"))
-    // the per-batch staging writes are independent jobs — overlap them
-    // (guide §2.6); batch order is carried by the planted mtimes, not by
-    // write completion order
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    batches.zipWithIndex.map { case (df, i) =>
-      Future {
-        val tmp = Files.createTempDirectory(s"${prefix}_half")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val dst = inDir.resolve(s"batch$i.parquet")
-        Files.copy(firstParquetPart(tmp), dst)
-        Files.setLastModifiedTime(dst, FileTime.fromMillis(1700000000000L + i * 1000L))
-        deleteDirTree(tmp)
-      }
-    }.foreach(Await.result(_, Duration.Inf))
+    // the per-batch staging writes are independent jobs — overlap them;
+    // batch order is carried by the planted mtimes, not by write
+    // completion order
+    graft.Overlap.all(batches.zipWithIndex.map { case (df, i) => () =>
+      val tmp = Files.createTempDirectory(s"${prefix}_half")
+      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      val dst = inDir.resolve(s"batch$i.parquet")
+      Files.copy(firstParquetPart(tmp), dst)
+      Files.setLastModifiedTime(dst, FileTime.fromMillis(1700000000000L + i * 1000L))
+      deleteDirTree(tmp)
+    })
     inDir.toString
   }
 
@@ -210,17 +205,12 @@ private[graft] object AnalyticsEntries {
       // Pin both pair sets: exact feeds THREE actions (its count, the
       // hit join, the anti-join) and lsh two — unpinned, each action
       // re-evaluated the full all-pairs / banded DAG. The two legs are
-      // independent pipelines, so their pins run overlapped (guide §2.6).
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val exactF = Future {
+      // independent pipelines, so their pins run overlapped.
+      val (exact, lsh) = graft.Overlap.both(
         Similarity.cosineNearDupsExact(emb, 0.4).select("vec_a", "vec_b")
-          .localCheckpoint(true)
-      }
-      val lsh = Similarity.cosineNearDups(emb, 64, 0.4).select("vec_a", "vec_b")
-        .localCheckpoint(true)
-      val exact = Await.result(exactF, Duration.Inf)
+          .localCheckpoint(true),
+        Similarity.cosineNearDups(emb, 64, 0.4).select("vec_a", "vec_b")
+          .localCheckpoint(true))
       val nExact = exact.count()
       val hit = exact.join(lsh, Seq("vec_a", "vec_b")).count()
       val spurious = lsh.join(exact, Seq("vec_a", "vec_b"), "left_anti").count()
@@ -976,16 +966,13 @@ private[graft] object AnalyticsEntries {
           .select((col("doc_id") + 500000000).as("doc_id"),
             concat(rev, lit(" planted tail two")).as("text")))
       // staging the input batches and seeding the standing state are
-      // independent write pipelines — overlap them (guide §2.6)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val inDirF = Future { stageOrderedBatches("graft_incr", Seq(b1, b2)) }
+      // independent write pipelines — overlap them
       val out = cleanupOnExit(
         java.nio.file.Files.createTempDirectory("graft_incr_out")).toString
       val sign = crawlSign
-      Dedup.initIncrementalState(docs, s"$out/state", sign, 12, 6)
-      val inDir = Await.result(inDirF, Duration.Inf)
+      val (inDir, _) = graft.Overlap.both(
+        stageOrderedBatches("graft_incr", Seq(b1, b2)),
+        Dedup.initIncrementalState(docs, s"$out/state", sign, 12, 6))
       val stream = graft.streaming.Transforms.PathInput(
         inDir, b1.schema, maxFilesPerTrigger = Some(1)).stream(s)
       Dedup.incrementalNearDupsStream(stream, s"$out/state", s"$out/verdicts",
@@ -1099,17 +1086,14 @@ private[graft] object AnalyticsEntries {
       // and the two-batch index growth.
       val (b0, b1) = crawlFixture(s, dir)
       // staging and state seeding are independent writes — overlap them
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val inDirF = Future { stageOrderedBatches("graft_crawl", Seq(b0, b1)) }
       val out = cleanupOnExit(
         java.nio.file.Files.createTempDirectory("graft_crawl_out")).toString
       val sign = crawlSign
-      Dedup.initIncrementalState(
-        T(s, dir, "documents").select(col("doc_id"), col("text")),
-        s"$out/state", sign, 12, 6)
-      val inDir = Await.result(inDirF, Duration.Inf)
+      val (inDir, _) = graft.Overlap.both(
+        stageOrderedBatches("graft_crawl", Seq(b0, b1)),
+        Dedup.initIncrementalState(
+          T(s, dir, "documents").select(col("doc_id"), col("text")),
+          s"$out/state", sign, 12, 6))
       val stream = graft.streaming.Transforms.PathInput(
         inDir, b0.schema, maxFilesPerTrigger = Some(1)).stream(s)
       CleanPipeline.crawlStream(stream, s"$out/state", s"$out/verdicts",
@@ -1132,19 +1116,14 @@ private[graft] object AnalyticsEntries {
       def files(b: DataFrame): DataFrame = graft.analytics.Warc.responseFiles(
         b, col("doc_id") % 4, col("doc_id"), col("html"), col("url"))
       // staging and state seeding are independent writes — overlap them
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val inDirF = Future {
-        stageOrderedBatches("graft_wcrawl", Seq(files(b0), files(b1)))
-      }
       val out = cleanupOnExit(
         java.nio.file.Files.createTempDirectory("graft_wcrawl_out")).toString
       val sign = crawlSign
-      Dedup.initIncrementalState(
-        T(s, dir, "documents").select(col("doc_id"), col("text")),
-        s"$out/state", sign, 12, 6)
-      val inDir = Await.result(inDirF, Duration.Inf)
+      val (inDir, _) = graft.Overlap.both(
+        stageOrderedBatches("graft_wcrawl", Seq(files(b0), files(b1))),
+        Dedup.initIncrementalState(
+          T(s, dir, "documents").select(col("doc_id"), col("text")),
+          s"$out/state", sign, 12, 6))
       val stream = graft.streaming.Transforms.PathInput(
         inDir, files(b0).schema, maxFilesPerTrigger = Some(1)).stream(s)
       CleanPipeline.crawlStreamFromWarc(stream, s"$out/state",

@@ -149,7 +149,7 @@ private[graft] object MediaEntries {
 
     "pipe_image_stream" -> ((s, dir) => {
       // The image funnel as a continuous query with a GROWING hash
-      // index (round 16) — the multimodal dd_incremental_stream:
+      // index — the multimodal dd_incremental_stream:
       // micro-batch 0 delivers fresh law-B images (all `new`, admitted
       // to the standing index seeded with the law-A corpus);
       // micro-batch 1 delivers (a) law-A corpus copies -> dup of the
@@ -157,7 +157,7 @@ private[graft] object MediaEntries {
       // dup of the batch-0 id (the growing-index proof), (c) an
       // intra-batch law-C pair -> earlier `new`, later `dup`, and
       // (d) dark-law images the REAL pixel gate must reject, and
-      // (e, round 17) JPEGs with planted DQT qualities the PRE-DECODE
+      // (e) JPEGs with planted DQT qualities the PRE-DECODE
       // gate must judge (sub-50 reject, keepers `new` but never in the
       // hash index — batch-funnel parity). The oracle replays both
       // batches in sequence, both gates included.
@@ -171,13 +171,6 @@ private[graft] object MediaEntries {
         .select(col("doc_id")).as[java.lang.Long]
       val out = cleanupOnExit(
         java.nio.file.Files.createTempDirectory("graft_imgs_out")).toString
-      // state seeding and batch staging are independent writes — overlap
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val seedF = Future {
-        PngCodec.initImageState(PngCodec.synthPngMedia(corpusIds), s"$out/state")
-      }
       val b0 = PngCodec.synthMediaWithLaw(
         ids(31, 900000000L), PngCodec.classPixelB).toDF()
       val b1 = PngCodec.synthMediaWithLaw(
@@ -192,8 +185,10 @@ private[graft] object MediaEntries {
           ids(37, 600000000L), PngCodec.darkPixel).toDF())
         .unionByName(graft.analytics.JpegDqt.synthJpegMedia(
           ids(41, 700000000L)).toDF())
-      val inDir = AnalyticsEntries.stageOrderedBatches("graft_imgs", Seq(b0, b1))
-      Await.result(seedF, Duration.Inf)
+      // state seeding and batch staging are independent writes — overlap
+      val (_, inDir) = graft.Overlap.both(
+        PngCodec.initImageState(PngCodec.synthPngMedia(corpusIds), s"$out/state"),
+        AnalyticsEntries.stageOrderedBatches("graft_imgs", Seq(b0, b1)))
       val stream = graft.streaming.Transforms.PathInput(
         inDir, b0.schema, maxFilesPerTrigger = Some(1)).stream(s)
       PngCodec.imageFunnelStream(stream, s"$out/state", s"$out/verdicts",

@@ -504,24 +504,16 @@ private[graft] object SftMixtureEntries {
         .select(col("vec_id").as("tgt_id"), col("embedding"))
       // The exact certification leg and the IVF production leg are
       // independent pipelines until the final recall join — run them as
-      // overlapped jobs (guide §2.6). Both pinned: exact feeds two
-      // actions (its own count and the recall join); pinning the mined
-      // IVF pairs (a tiny table) lets its whole DAG evaluate inside the
-      // overlapped future instead of inside the sequential hit-count.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val exactF = Future {
+      // overlapped jobs. Both pinned: exact feeds two actions (its own
+      // count and the recall join); pinning the mined IVF pairs (a tiny
+      // table) lets its whole DAG evaluate inside the overlapped leg
+      // instead of inside the sequential hit-count.
+      val (exact, ivf) = graft.Overlap.both(
         Bitext.marginMineExact(src, tgt, 4, 1000000L)
-          .select("src_id", "tgt_id").localCheckpoint(true)
-      }
-      val ivfF = Future {
+          .select("src_id", "tgt_id").localCheckpoint(true),
         Bitext.marginMineIvf(src, tgt, 4, 1000000L, candK = 32,
           nLists = 8, nProbe = 4)
-          .select("src_id", "tgt_id").localCheckpoint(true)
-      }
-      val exact = Await.result(exactF, Duration.Inf)
-      val ivf = Await.result(ivfF, Duration.Inf)
+          .select("src_id", "tgt_id").localCheckpoint(true))
       val n = exact.count()
       val hit = exact.join(ivf, Seq("src_id", "tgt_id")).count()
       Seq(("bt_margin_recall_ge_50", n, hit.toDouble / math.max(n, 1L) >= 0.5))

@@ -1,10 +1,9 @@
 package graft.streaming
 
-import graft.Pins._
+import graft.{Overlap, Pins}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
-import scala.util.{Failure, Success, Try}
 
 /**
  * Datalake materialization (SURVEY §2.7 D1/D4/D6): continuous
@@ -262,24 +261,23 @@ object Datalake {
       tsCol: Column, basePath: String, partFn: Column => Column): Seq[(String, Long)] = {
     val seen = Observation()
     val valid = col("error_code").isNull
-    val routed = batch
-      .withColumn("error_code", errorCode)
-      .withColumn("_output", routeCol)
-      .withColumn("p_key", partFn(tsCol))
-      .observe(seen, collect_set(when(valid, col("_output"))).as("outputs"),
-        count_if(!valid).as("dlq"), count_if(valid && col("_output").isNull).as("unrouted"))
-      .repartition(col("p_key"))
-      .pinned()
-    try {
+    Pins.scoped { scope =>
+      val routed = scope.pin(batch
+        .withColumn("error_code", errorCode)
+        .withColumn("_output", routeCol)
+        .withColumn("p_key", partFn(tsCol))
+        .observe(seen, collect_set(when(valid, col("_output"))).as("outputs"),
+          count_if(!valid).as("dlq"), count_if(valid && col("_output").isNull).as("unrouted"))
+        .repartition(col("p_key")))
       val m = seen.get
       require(m("unrouted") == 0L, s"${m("unrouted")} valid rows have a null route")
       val tables = m("outputs").asInstanceOf[scala.collection.Seq[String]].toSeq.sorted.map(o =>
         o -> routed.where(valid && col("_output") === o).drop("_output", "error_code"))
       val dlq = if (m("dlq") == 0L) Nil else Seq(DlqDir -> routed.where(!valid))
-      inParallel((tables ++ dlq).map { case (o, rows) =>
+      Overlap.all((tables ++ dlq).map { case (o, rows) =>
         () => o -> appendCounted(rows, s"$basePath/$o")
       })
-    } finally graft.Pins.unpin(routed)
+    }
   }
 
   /** Append `rows` partitioned by `p_key`; returns the rows written,
@@ -289,26 +287,6 @@ object Datalake {
     rows.observe(n, count(lit(1)).as("n"))
       .write.mode("append").partitionBy("p_key").parquet(path)
     n.get("n").asInstanceOf[Long]
-  }
-
-  /** Runs the independent `legs` concurrently (the reference's
-    * multiplexer drives its partitioning writers concurrently too), each
-    * on a thread started here: a new thread inherits the caller's Spark
-    * local properties (job group, description, scheduler pool), so
-    * cancelling the caller's job group cancels every leg. Every leg is
-    * joined before this returns or throws, then the first failure is
-    * rethrown — nothing the legs read is released under them. */
-  private[graft] def inParallel[T](legs: Seq[() => T]): Seq[T] = {
-    val results = new Array[Try[T]](legs.size)
-    val threads = legs.indices.map(i => new Thread(() => results(i) =
-      try Success(legs(i)()) catch { case e: Throwable => Failure(e) }, "datalake-multiplex"))
-    threads.foreach(_.start())
-    var interrupted = false
-    threads.foreach { t =>
-      while (t.isAlive) try t.join() catch { case _: InterruptedException => interrupted = true }
-    }
-    if (interrupted) Thread.currentThread().interrupt()
-    results.toSeq.map(_.get)
   }
 
   /**

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.Pins._
+import graft.{Overlap, Pins}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -159,17 +159,14 @@ object Transforms {
       .option("checkpointLocation", s"$checkpointDir/${spec.name}")
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: Dataset[(String, T)], _: Long) =>
-        // eager localCheckpoint, NOT cache(): the distinct-outputs pass and
-        // the per-output filtered writes are independent consumers — under
+        // eager pin, NOT cache(): the distinct-outputs pass and the
+        // per-output filtered writes are independent consumers — under
         // AQE they race a lazily-filled InMemoryRelation and recompute the
         // batch (including the guest-VM transform) once each
-        val df = batch.toDF("_output", "_value").pinned()
-        try {
+        Pins.scoped { scope =>
+          val df = scope.pin(batch.toDF("_output", "_value"))
           val outputs = df.select("_output").distinct().collect().map(_.getString(0)).sorted
-          // independent appends over the pinned batch — overlap them
-          // instead of paying per-job driver latency N times; the legs
-          // keep the batch's job group and all finish before the unpin
-          Datalake.inParallel(outputs.toSeq.map { o => () =>
+          Overlap.all(outputs.toSeq.map { o => () =>
             val rows = df.where(col("_output") === o)
             val payload = rows.schema("_value").dataType match {
               case _: StructType => rows.select("_value.*")
@@ -178,12 +175,7 @@ object Transforms {
             payload.write.mode("append").parquet(s"$basePath/$o")
           })
           ()
-        } finally
-          // free this micro-batch's pin deterministically even on a failed
-          // trigger — a long-running stream must not wait on the
-          // ContextCleaner (cluster path; the local checkpoint path is
-          // GC-freed either way)
-          graft.Pins.unpin(df)
+        }
       }
       .start()
   }

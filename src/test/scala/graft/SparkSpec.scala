@@ -1,5 +1,9 @@
 package graft
 
+import java.util.Properties
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -9,6 +13,30 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
   override def afterAll(): Unit = ()
+
+  /** Properties of every job started while `body` runs. The listener bus
+    * is asynchronous, so a marker job started after `body` (and one
+    * before it), each under a group of its own, shows that every job
+    * start in between has been delivered. */
+  protected def jobsDuring(body: => Any): Seq[Properties] = {
+    val sc = spark.sparkContext
+    val jobs = new LinkedBlockingQueue[Properties]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.put(Option(e.properties).getOrElse(new Properties))
+    }
+    def untilMarker(): Seq[Properties] = {
+      val id = java.util.UUID.randomUUID().toString
+      sc.setJobGroup(id, "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      Iterator.continually(jobs.poll(60, TimeUnit.SECONDS))
+        .map { p => assert(p != null, "marker job start not delivered"); p }
+        .takeWhile(_.getProperty("spark.jobGroup.id") != id).toSeq
+    }
+    sc.addSparkListener(listener)
+    try { untilMarker(); body; untilMarker() }
+    finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {

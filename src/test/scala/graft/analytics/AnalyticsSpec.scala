@@ -185,9 +185,7 @@ class AnalyticsSpec extends SparkSpec {
   }
 
   test("incremental dedup stream: the standing index grows across micro-batches") {
-    import java.nio.file.{Files, Paths}
-    import java.nio.file.attribute.FileTime
-    val root = Files.createTempDirectory("graft_incr_spec")
+    val root = java.nio.file.Files.createTempDirectory("graft_incr_spec")
     val sign = (d: org.apache.spark.sql.DataFrame) =>
       Dedup.minHashSignaturesParityFromText(d, col("doc_id"), col("text"), 2, 16)
     Dedup.initIncrementalState(docs, s"$root/state", sign, 16, 8)
@@ -199,19 +197,7 @@ class AnalyticsSpec extends SparkSpec {
       (300L, "zebras gallop across wide open savannah plains now"),
       (301L, "the quick brown fox jumps over the lazy dog today"))
       .toDF("doc_id", "text")
-    val in = Files.createDirectory(Paths.get(s"$root/in"))
-    Seq((b0, "b0", 1700000000000L), (b1, "b1", 1700000001000L)).foreach {
-      case (df, name, mtime) =>
-        val tmp = Files.createTempDirectory("graft_incr_spec_half")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = Files.list(tmp).filter(p =>
-          p.getFileName.toString.endsWith(".parquet")).findFirst.get
-        val dst = in.resolve(s"$name.parquet")
-        Files.copy(part, dst)
-        Files.setLastModifiedTime(dst, FileTime.fromMillis(mtime))
-    }
-    val stream = graft.streaming.Transforms.PathInput(
-      in.toString, b0.schema, maxFilesPerTrigger = Some(1)).stream(spark)
+    val stream = StagedBatches.stage(Seq(b0, b1))()
     Dedup.incrementalNearDupsStream(stream, s"$root/state", s"$root/out",
       s"$root/ckpt", sign, shingleN = 2, k = 16, bands = 8, threshold = 0.3)
     val got = spark.read.parquet(s"$root/out")
@@ -256,9 +242,7 @@ class AnalyticsSpec extends SparkSpec {
   }
 
   test("crawl stream: gate ladder, index growth, blocked docs never admitted") {
-    import java.nio.file.{Files, Paths}
-    import java.nio.file.attribute.FileTime
-    val root = Files.createTempDirectory("graft_crawl_spec")
+    val root = java.nio.file.Files.createTempDirectory("graft_crawl_spec")
     val sign = (d: org.apache.spark.sql.DataFrame) =>
       Dedup.minHashSignaturesParityFromText(d, col("doc_id"), col("text"), 2, 16)
     Dedup.initIncrementalState(docs, s"$root/state", sign, 16, 8)
@@ -279,19 +263,7 @@ class AnalyticsSpec extends SparkSpec {
       (302L, "https://news.example/d", page("completely different words entirely unrelated text here now yes")),
       (303L, "https://news.example/e", page("one below gate"))) // minTokens - 1 words
       .toDF("doc_id", "url", "html")
-    val in = Files.createDirectory(Paths.get(s"$root/in"))
-    Seq((b0, "b0", 1700000000000L), (b1, "b1", 1700000001000L)).foreach {
-      case (df, name, mtime) =>
-        val tmp = Files.createTempDirectory("graft_crawl_spec_half")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = Files.list(tmp).filter(p =>
-          p.getFileName.toString.endsWith(".parquet")).findFirst.get
-        val dst = in.resolve(s"$name.parquet")
-        Files.copy(part, dst)
-        Files.setLastModifiedTime(dst, FileTime.fromMillis(mtime))
-    }
-    val stream = graft.streaming.Transforms.PathInput(
-      in.toString, b0.schema, maxFilesPerTrigger = Some(1)).stream(spark)
+    val stream = StagedBatches.stage(Seq(b0, b1))()
     CleanPipeline.crawlStream(stream, s"$root/state", s"$root/out",
       s"$root/ckpt", sign, Seq("evil.example"), Seq("casino"),
       minTokens = 4, shingleN = 2, k = 16, bands = 8, threshold = 0.3)

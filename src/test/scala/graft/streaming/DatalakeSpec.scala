@@ -1,14 +1,11 @@
 package graft.streaming
 
 import java.nio.file.{Files, Paths}
-import java.util.Properties
-import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
 import scala.concurrent.{Await, Future}
 import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -115,30 +112,6 @@ class DatalakeSpec extends SparkSpec {
 
   private def offsets(path: String) =
     spark.read.parquet(path).select("offset").as[Long].collect().toSet
-
-  /** Properties of every job started while `body` runs. The listener bus
-    * is asynchronous, so a marker job started after `body` (and one
-    * before it), each under a group of its own, shows that every job
-    * start in between has been delivered. */
-  private def jobsDuring(body: => Any): Seq[Properties] = {
-    val sc = spark.sparkContext
-    val jobs = new LinkedBlockingQueue[Properties]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.put(Option(e.properties).getOrElse(new Properties))
-    }
-    def untilMarker(): Seq[Properties] = {
-      val id = java.util.UUID.randomUUID().toString
-      sc.setJobGroup(id, "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      Iterator.continually(jobs.poll(60, TimeUnit.SECONDS))
-        .map { p => assert(p != null, "marker job start not delivered"); p }
-        .takeWhile(_.getProperty("spark.jobGroup.id") != id).toSeq
-    }
-    sc.addSparkListener(listener)
-    try { untilMarker(); body; untilMarker() }
-    finally sc.removeSparkListener(listener)
-  }
 
   test("multiplexer with DLQ: counts equal a groupBy oracle; every row lands in its table or error code") {
     val base = tmp("muxdlq")
