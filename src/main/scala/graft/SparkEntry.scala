@@ -8,12 +8,8 @@ import org.apache.spark.sql.types._
 
 import org.apache.spark.sql.expressions.Window
 
-import graft.analytics.{CleanPipeline, Decontaminate, Dedup, Sampling, Similarity, Sketches, TextAnalysis}
-import graft.functions.GraftFunctions
-import graft.groups.ConsumerGroups
-import graft.log.{Compaction, RecordLog, TieredStorage, Transactions, TxnEngine}
-import graft.model.BatchType
-import graft.operators.Operators
+import graft.analytics.Similarity
+import graft.log.{RecordLog, TxnEngine}
 
 /**
  * Driver contract: one `queries` entry per implemented operator from

@@ -1,16 +1,9 @@
 package graft.entries
 
-import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
-import org.apache.spark.sql.expressions.Window
-import graft.analytics.{CleanPipeline, Decontaminate, Dedup, Sampling, Similarity, Sketches, TextAnalysis}
-import graft.functions.GraftFunctions
 import graft.groups.ConsumerGroups
-import graft.log.{Compaction, RecordLog, TieredStorage, Transactions, TxnEngine}
-import graft.model.BatchType
-import graft.operators.Operators
+import graft.log.{Compaction, TxnEngine}
 
 import graft.SparkEntry._
 
@@ -25,7 +18,6 @@ private[graft] object AdminEntries {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ----- §2.10 admin: configs as a compacted command log -----
     "adm_describe_configs" -> ((s, dir) => {
-      import s.implicits._
       graft.admin.Admin.describeConfigs(s, Seq("events"), configAlters(s)).orderBy("key")
     }),
 
@@ -781,7 +773,6 @@ private[graft] object AdminEntries {
       // (decommissioning / unavailable / over the soft disk ratio) plus
       // rack-constraint duplicates, all declarative DataFrame work over
       // the health-report tables.
-      import s.implicits._
       graft.admin.Balancer.violations(balancerNodes(s), balancerReplicas(s), 0.8)
         // -1/'' sentinels: nullable ints turn float64 in the driver's
         // pandas hasher (same trap as sec_oidc_auth)
@@ -798,7 +789,6 @@ private[graft] object AdminEntries {
       // fullest duplicate, disk shed largest-first — allocation is
       // rack-diverse, disk-headroom-checked, most-free-bytes,
       // id-tie-broken. Oracle pins the exact plan.
-      import s.implicits._
       graft.admin.Balancer.planActions(balancerNodes(s), balancerReplicas(s), 0.8)
         .orderBy("ord")
     }),

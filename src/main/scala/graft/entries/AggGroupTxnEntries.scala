@@ -1,14 +1,10 @@
 package graft.entries
 
-import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
-import graft.analytics.{CleanPipeline, Decontaminate, Dedup, Sampling, Similarity, Sketches, TextAnalysis}
-import graft.functions.GraftFunctions
 import graft.groups.ConsumerGroups
-import graft.log.{Compaction, RecordLog, TieredStorage, Transactions, TxnEngine}
+import graft.log.{Compaction, RecordLog, TxnEngine}
 import graft.model.BatchType
 import graft.operators.Operators
 
@@ -324,7 +320,7 @@ private[graft] object AggGroupTxnEntries {
       // persists in the checkpoint across batches, so the emitted
       // decisions are byte-identical to the batch fold — certified by
       // the SAME recursive-CTE oracle.
-      import java.nio.file.{Files, Paths}
+      import java.nio.file.Files
       import java.nio.file.attribute.FileTime
       val reqs = throttlerReqs(s, dir)
       val inDir = cleanupOnExit(Files.createTempDirectory("graft_thr_in"))
@@ -591,7 +587,6 @@ private[graft] object AggGroupTxnEntries {
       // dedup-skip, newer append), and a property past every entry
       // (full retry after the Iceberg commit landed but the STM marks
       // didn't: everything dedups, updates still emitted).
-      import s.implicits._
       val cl = dlcControlLog(s)
       val pend = graft.streaming.DatalakeCoordinator.pendingEntries(cl,
         graft.streaming.DatalakeCoordinator.outcomes(cl))
@@ -609,7 +604,6 @@ private[graft] object AggGroupTxnEntries {
       // regardless of dedup (:147,203-216); iceberg_txn false when all
       // files deduplicated (:218-226); new_property = max appended
       // added_pending_at (:176-178,230).
-      import s.implicits._
       val cl = dlcControlLog(s)
       val pend = graft.streaming.DatalakeCoordinator.pendingEntries(cl,
         graft.streaming.DatalakeCoordinator.outcomes(cl))

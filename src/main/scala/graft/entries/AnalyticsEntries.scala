@@ -1,16 +1,8 @@
 package graft.entries
 
-import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
-import org.apache.spark.sql.expressions.Window
-import graft.analytics.{Bitext, CleanPipeline, Decontaminate, Dedup, Sampling, Sft, Similarity, Sketches, TextAnalysis}
-import graft.functions.GraftFunctions
-import graft.groups.ConsumerGroups
-import graft.log.{Compaction, RecordLog, TieredStorage, Transactions, TxnEngine}
-import graft.model.BatchType
-import graft.operators.Operators
+import graft.analytics.{CleanPipeline, Decontaminate, Dedup, Similarity, Sketches, TextAnalysis}
 
 import graft.SparkEntry._
 
@@ -831,7 +823,6 @@ private[graft] object AnalyticsEntries {
       // per letter-word — no segmentation can beat max-length pieces).
       // ok pins floor ≤ encoded ≤ chars; a broken trainer (missing
       // chars, unnormalized probs) blows the bound or fails coverage.
-      import s.implicits._
       val vocab = graft.analytics.Unigram.learnVocab(
         T(s, dir, "documents"), col("text"))
       val encCount = graft.analytics.Unigram.encodedCount(vocab)

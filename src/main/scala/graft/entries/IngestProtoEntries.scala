@@ -1,16 +1,11 @@
 package graft.entries
 
-import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
-import graft.analytics.{CleanPipeline, Decontaminate, Dedup, Sampling, Similarity, Sketches, TextAnalysis}
-import graft.functions.GraftFunctions
 import graft.groups.ConsumerGroups
-import graft.log.{Compaction, RecordLog, TieredStorage, Transactions, TxnEngine}
-import graft.model.BatchType
-import graft.operators.Operators
+import graft.log.RecordLog
 
 import graft.SparkEntry._
 
@@ -22,16 +17,14 @@ import graft.SparkEntry._
   */
 private[graft] object IngestProtoEntries {
 
-  /** Order-insensitive payload hash of one e2e hop: the SUM of a 32-bit
-    * md5 prefix over each row's `partition|offset|key|value` spelling.
-    * The DuckDB oracle re-derives every hop hash, so a hop that drops,
-    * duplicates, rebases, or corrupts ANY cell flips the chain — a
-    * count-only hop check masked a wrong-column bug in round 16. */
-  private def hopHash(df: DataFrame): Long = hopStats(df)._2
-
-  /** Row count AND payload hash of a hop in ONE aggregate pass — the
-    * e2e entries need both, and separate count()/hash() calls would
-    * re-execute the hop's whole upstream DAG. */
+  /** Row count AND order-insensitive payload hash of one e2e hop, in ONE
+    * aggregate pass — the e2e entries need both, and separate
+    * count()/hash() calls would re-execute the hop's whole upstream DAG.
+    * The hash is the SUM of a 32-bit md5 prefix over each row's
+    * `partition|offset|key|value` spelling. The DuckDB oracle re-derives
+    * every hop hash, so a hop that drops, duplicates, rebases, or
+    * corrupts ANY cell flips the chain, where a count-only hop check
+    * would not. */
   private def hopStats(df: DataFrame): (Long, Long) = {
     val r = df.agg(count(lit(1)),
       sum(conv(substring(md5(concat_ws("|",
@@ -41,7 +34,7 @@ private[graft] object IngestProtoEntries {
     (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
   }
 
-  /** [[hopHash]] for a driver-side hop (post-wire-decode tuples). */
+  /** The [[hopStats]] hash for a driver-side hop (post-wire-decode tuples). */
   private def hopHashRows(rows: Seq[(Int, Long, String, String)]): Long =
     rows.map { case (p, o, k, v) =>
       java.lang.Long.parseLong(

@@ -2,7 +2,6 @@ package graft.entries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.analytics.{Bitext, CleanPipeline, Dedup, Sampling, Sft, Similarity, TextAnalysis}
 
 import graft.SparkEntry._

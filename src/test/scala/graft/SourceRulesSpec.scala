@@ -22,4 +22,11 @@ class SourceRulesSpec extends AnyFunSuite {
     assert(sources.nonEmpty)
     assert(offenders.isEmpty, offenders.mkString(", "))
   }
+
+  test("GraftSession is the one place a main builds its SparkSession") {
+    // one builder keeps every main on the same local settings
+    val builders = sources.filter(p =>
+      new String(Files.readAllBytes(p), "UTF-8").contains("SparkSession.builder()"))
+    assert(builders.map(_.getFileName.toString) === Seq("GraftSession.scala"))
+  }
 }

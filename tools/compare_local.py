@@ -6,15 +6,37 @@ Usage: python3 tools/compare_local.py <sfDir> <verifyOutDir>
 Mimics the driver's t2 check: for each query with an oracle, run the SQL in
 DuckDB over views named after the parquet tables, load the Spark parquet
 output, sort columns by name, compare row counts, schemas (loosely), and
-values (exact for ints/strings, tolerant 1e-9 for floats).
+values (exact for ints/strings, tolerant 1e-9 for floats). Both sides are
+read with pandas' nullable integer dtypes, so an integer column with nulls
+stays integer and is compared exactly (a null equals a null) instead of
+through float64.
 """
 import sys, json, glob
 import duckdb
 import pandas as pd
 import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
+
+NULLABLE_INTS = {
+    pa.int8(): pd.Int8Dtype(), pa.int16(): pd.Int16Dtype(),
+    pa.int32(): pd.Int32Dtype(), pa.int64(): pd.Int64Dtype(),
+    pa.uint8(): pd.UInt8Dtype(), pa.uint16(): pd.UInt16Dtype(),
+    pa.uint32(): pd.UInt32Dtype(), pa.uint64(): pd.UInt64Dtype(),
+}
+
+
+def with_nullable_ints(df: pd.DataFrame, table: pa.Table) -> pd.DataFrame:
+    """`df` (read from `table`) with each integer column of `table` as a
+    pandas nullable integer column: a plain read turns an integer column
+    with nulls into float64, which rounds values above 2^53."""
+    for f in table.schema:
+        if pa.types.is_integer(f.type):
+            df[f.name] = table.column(f.name).to_pandas(types_mapper=NULLABLE_INTS.get)
+    return df
 
 
 def norm(df: pd.DataFrame) -> pd.DataFrame:
@@ -52,8 +74,10 @@ def main(sf_dir: str, out_dir: str) -> None:
             if huge:
                 print(f"FAIL {name}: HUGEINT output columns {huge} — wrap in CAST(... AS BIGINT)")
                 n_fail += 1;  continue
-            got = norm(pd.read_parquet(f"{out_dir}/{name}"))
-            want = norm(rel.df())
+            spark_table = pq.read_table(f"{out_dir}/{name}")
+            got = norm(with_nullable_ints(spark_table.to_pandas(), spark_table))
+            duck_table = rel.arrow()
+            want = norm(with_nullable_ints(con.from_arrow(duck_table).df(), duck_table))
         except Exception as e:
             print(f"FAIL {name}: {e}");  n_fail += 1;  continue
         if list(got.columns) != list(want.columns):
@@ -66,7 +90,7 @@ def main(sf_dir: str, out_dir: str) -> None:
             g, w = got[c], want[c]
             if pd.api.types.is_float_dtype(g) or pd.api.types.is_float_dtype(w):
                 ok = np.allclose(g.astype(float), w.astype(float), rtol=1e-9, atol=1e-9, equal_nan=True)
-                exact = np.array_equal(g.astype(float).values, w.astype(float).values)
+                exact = np.array_equal(g.astype(float).values, w.astype(float).values, equal_nan=True)
                 if ok and not exact:
                     print(f"  note {name}.{c}: close but not bit-exact")
                 if not ok:
