@@ -2313,8 +2313,10 @@ object SparkEntry {
   /** Cache-trim oracle: the cache file table (mirrors [[cacheFiles]])
     * and the LRU walk (`cache_service.cc do_trim`) replayed as a
     * recursive CTE — quota checked before each candidate, skip rules,
-    * companion weights accruing at the segment's step. Appended to a
-    * RECURSIVE `$LogCte,` by the `ct_cache_trim` oracle (stripMargin
+    * companion weights accruing at the segment's step — ending in
+    * `trim_actions`, one row per file with its action at the 120000-byte,
+    * 1000-object quota. Appended to a RECURSIVE `$LogCte,` by the
+    * `ct_cache_trim` and `adm_rest_cloud_storage` oracles (stripMargin
     * runs twice — no line may start with `||`). */
   private[graft] val CacheTrimCte: String =
     """ sized AS (SELECT partition, "offset",
@@ -2363,7 +2365,23 @@ object SparkEntry {
       |  WHERE NOT (w.ds >= c.s2d AND w.dc >= c.o2d)),
       | lastw AS (SELECT node_id, max(rn) AS wmax FROM walk GROUP BY 1),
       | delsegs AS (SELECT c.node_id, c.path FROM cand c JOIN lastw l USING (node_id)
-      |   WHERE c.rn <= l.wmax AND NOT (c.is_exempt OR c.is_tmp OR c.is_comp))""".stripMargin
+      |   WHERE c.rn <= l.wmax AND NOT (c.is_exempt OR c.is_tmp OR c.is_comp)),
+      | trim_actions AS (
+      |  SELECT f.node_id, f.path, f.size_bytes,
+      |    CASE WHEN dc.path IS NOT NULL THEN 'deleted_companion'
+      |         WHEN c.rn IS NOT NULL AND c.rn <= l.wmax THEN
+      |           CASE WHEN c.is_exempt THEN 'skipped_exempt'
+      |                WHEN c.is_tmp THEN 'skipped_tmp'
+      |                WHEN c.is_comp THEN 'skipped_companion'
+      |                ELSE 'deleted_lru' END
+      |         ELSE 'kept' END AS action
+      |  FROM files f
+      |  LEFT JOIN cand c ON c.node_id = f.node_id AND c.path = f.path
+      |  LEFT JOIN lastw l ON l.node_id = f.node_id
+      |  LEFT JOIN (SELECT DISTINCT s.node_id, f2.path
+      |             FROM delsegs s JOIN files f2 ON f2.node_id = s.node_id
+      |               AND (f2.path = s.path || '.tx' OR f2.path = s.path || '.index')) dc
+      |    ON dc.node_id = f.node_id AND dc.path = f.path)""".stripMargin
 
   // ---------------------------------------------------------------- contract
 

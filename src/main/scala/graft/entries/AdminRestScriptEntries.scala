@@ -1269,12 +1269,20 @@ private[graft] object AdminRestScriptEntries {
         | t(step, method, path, status, detail) ORDER BY step""".stripMargin,
 
     // Golden pin of the debug diagnostics surface (debug.cc route
-    // grammar, validation-ladder wording, engine-backed offsets/bytes
-    // at sf0.01: stored-log partition 0 slice = 200 rows / 1779 bytes
-    // txn translator kafka(3)=1, rp(2)=4).
+    // grammar, validation-ladder wording, txn translator kafka(3)=1,
+    // rp(2)=4). The engine-backed fields {start}, {hwm}, {bytes} and
+    // {index} are derived from the entry's input: the stored log's
+    // partition-0 slice with offset < 200.
 
     "adm_rest_debug" ->
-      """SELECT * FROM (VALUES
+      s"""$LogCte,
+        | st AS (
+        |  SELECT CAST(min("offset") AS VARCHAR) AS start_off,
+        |    CAST(max("offset") + 1 AS VARCHAR) AS hwm,
+        |    CAST(sum(length(props)) AS VARCHAR) AS bytes,
+        |    CAST(16 * count(*) AS VARCHAR) AS idx
+        |  FROM log WHERE partition = 0 AND "offset" < 200),
+        | script AS (SELECT * FROM (VALUES
         |  (1, 'GET', '/v1/debug/partition_leaders_table', 200, 'n=2;p0=0,prev=-1'),
         |  (2, 'POST', '/v1/partitions/kafka/events/0/transfer_leadership', 200, 'transferred'),
         |  (3, 'GET', '/v1/debug/partition_leaders_table', 200, 'p0=1,prev=0,term=2'),
@@ -1292,7 +1300,7 @@ private[graft] object AdminRestScriptEntries {
         |  (15, 'GET', '/v1/debug/is_node_isolated', 200, 'isolated=false'),
         |  (16, 'GET', '/v1/debug/controller_status', 200, 'applied=1,start=0'),
         |  (17, 'GET', '/v1/debug/cloud_storage_usage', 400, 'message=batch_size must be an integer: x'),
-        |  (18, 'GET', '/v1/debug/cloud_storage_usage', 200, 'bytes=1779'),
+        |  (18, 'GET', '/v1/debug/cloud_storage_usage', 200, 'bytes={bytes}'),
         |  (19, 'PUT', '/v1/debug/blocked_reactor_notify_ms', 400, 'message=Invalid parameter ''timeout'' value {abc}'),
         |  (20, 'PUT', '/v1/debug/blocked_reactor_notify_ms', 200, 'set'),
         |  (21, 'GET', '/v1/debug/sampled_memory_profile', 400, 'message=Shard id too high, max shard id is 1'),
@@ -1301,11 +1309,11 @@ private[graft] object AdminRestScriptEntries {
         |  (24, 'GET', '/v1/debug/cpu_profile', 200, 'n=1;occ=10'),
         |  (25, 'PUT', '/v1/debug/restart_service', 404, 'message=Invalid service: foo'),
         |  (26, 'PUT', '/v1/debug/restart_service', 200, 'restarted'),
-        |  (27, 'GET', '/v1/debug/partition/kafka/events/0', 200, 'ntp={kafka/events/0},replicas=3,start=0,hwm=200,leader=false,stm=rm_stm'),
+        |  (27, 'GET', '/v1/debug/partition/kafka/events/0', 200, 'ntp={kafka/events/0},replicas=3,start={start},hwm={hwm},leader=false,stm=rm_stm'),
         |  (28, 'GET', '/v1/debug/partition/kafka/ghost/0', 500, 'message=Error cluster::errc:16 processing partition state for ntp: {kafka/ghost/0}'),
         |  (29, 'PUT', '/v1/debug/set_storage_failure_injection_enabled', 400, 'message=Invalid parameter ''value'' {yes}. Should be ''true'' or ''false'''),
         |  (30, 'PUT', '/v1/debug/set_storage_failure_injection_enabled', 200, 'enabled'),
-        |  (31, 'GET', '/v1/debug/local_storage_usage', 200, 'data=1779,index=3200,cache=0'),
+        |  (31, 'GET', '/v1/debug/local_storage_usage', 200, 'data={bytes},index={index},cache=0'),
         |  (32, 'GET', '/v1/debug/storage/disk_stat/ssd', 400, 'message=Unknown disk type: ssd'),
         |  (33, 'GET', '/v1/debug/storage/disk_stat/data', 200, 'total=1099511627776,free=805306368000'),
         |  (34, 'PUT', '/v1/debug/storage/disk_stat/data', 200, 'overridden'),
@@ -1322,7 +1330,11 @@ private[graft] object AdminRestScriptEntries {
         |  (45, 'PUT', '/v1/debug/broker_uuid', 400, 'message=node_id must not be negative'),
         |  (46, 'PUT', '/v1/debug/broker_uuid', 200, 'overridden'),
         |  (47, 'GET', '/v1/debug/broker_uuid', 200, 'uuid=22222222-2222-4222-8222-000000000002,id=7'))
-        | t(step, method, path, status, detail) ORDER BY step""".stripMargin,
+        | t(step, method, path, status, detail))
+        |SELECT step, method, path, status,
+        |  replace(replace(replace(replace(detail, '{start}', start_off), '{hwm}', hwm),
+        |    '{bytes}', bytes), '{index}', idx) AS detail
+        |FROM script, st ORDER BY step""".stripMargin,
 
     // Golden pin of the recovery-mode pair (recovery.cc): 404 outside
     // recovery mode, status flip across a successful migrate, the 503
@@ -1395,12 +1407,26 @@ private[graft] object AdminRestScriptEntries {
         | t(step, method, path, status, detail) ORDER BY step""".stripMargin,
 
     // Golden pin of the cloud-storage admin surface (shadow-indexing
-    // routes; manifest/status from the tiered-storage engine at
-    // sf0.01, trim figures from the cache-trim engine's LRU walk
-    // anomaly counters from the scrubber's findings).
+    // routes; manifest/status from the tiered-storage engine). The
+    // trim figures {trimmed_bytes} and {trimmed_objects} replay the
+    // cache-trim walk over the entry's cache-file table; the anomaly
+    // report's {p}, {missing} and {meta} come from the scrubber's
+    // findings on the lowest partition that has any.
 
     "adm_rest_cloud_storage" ->
-      """SELECT * FROM (VALUES
+      s"""${LogCte.replace("WITH log", "WITH RECURSIVE log")},$CacheTrimCte,${scrubCte(1000000000)},
+        | trimmed AS (
+        |  SELECT CAST(coalesce(sum(size_bytes), 0) AS VARCHAR) AS tb,
+        |    CAST(count(*) AS VARCHAR) AS tn
+        |  FROM trim_actions WHERE action LIKE 'deleted%'),
+        | anom AS (
+        |  SELECT CAST(partition AS VARCHAR) AS p,
+        |    CAST(count(*) FILTER (WHERE anomaly_type = 'missing_segment') AS VARCHAR) AS ms,
+        |    CAST(count(*) FILTER (WHERE anomaly_type NOT IN
+        |      ('missing_segment', 'missing_spillover_manifest')) AS VARCHAR) AS meta
+        |  FROM sanoms WHERE partition = (SELECT min(partition) FROM sanoms)
+        |  GROUP BY partition),
+        | script AS (SELECT * FROM (VALUES
         |  (1, 'POST', '/v1/cloud_storage/automated_recovery', 400, 'message=Cluster restore is not available, recovery mode enabled'),
         |  (2, 'POST', '/v1/cloud_storage/automated_recovery', 400, 'message=Cluster recovery is not available. Missing bucket property'),
         |  (3, 'POST', '/v1/cloud_storage/topic_recovery', 400, 'message=Topic recovery is not available. is cloud storage enabled?'),
@@ -1417,14 +1443,18 @@ private[graft] object AdminRestScriptEntries {
         |  (14, 'DELETE', '/v1/cloud_storage/lifecycle/old-topic/x', 400, 'message=Revision id must be an integer: x'),
         |  (15, 'DELETE', '/v1/cloud_storage/lifecycle/old-topic/41', 200, 'purged'),
         |  (16, 'GET', '/v1/cloud_storage/lifecycle', 200, 'n=0'),
-        |  (17, 'POST', '/v1/cloud_storage/cache/trim', 200, 'trimmed_bytes=205058,objects=111'),
-        |  (18, 'GET', '/v1/cloud_storage/anomalies/kafka/events/0', 200, 'p=0,missing_segments=1,meta=14'),
+        |  (17, 'POST', '/v1/cloud_storage/cache/trim', 200, 'trimmed_bytes={trimmed_bytes},objects={trimmed_objects}'),
+        |  (18, 'GET', '/v1/cloud_storage/anomalies/kafka/events/{p}', 200, 'p={p},missing_segments={missing},meta={meta}'),
         |  (19, 'GET', '/v1/cloud_storage/anomalies/kafka/ghost/0', 404, 'message=topic {ghost} not found'),
         |  (20, 'POST', '/v1/cloud_storage/sync_local_state/events/0', 200, 'synced'),
         |  (21, 'POST', '/v1/cloud_storage/unsafe_reset_metadata_from_cloud/kafka/events/0', 200, 'reset'),
         |  (22, 'POST', '/v1/cloud_storage/reset_scrubbing_metadata/kafka/events/0', 200, 'reset'),
         |  (23, 'POST', '/v1/cloud_storage/reset_scrubbing_metadata/kafka/ghost/0', 404, 'message={kafka/ghost/0} could not be found on shard 0.'))
-        | t(step, method, path, status, detail) ORDER BY step""".stripMargin,
+        | t(step, method, path, status, detail))
+        |SELECT step, method, replace(path, '{p}', p) AS path, status,
+        |  replace(replace(replace(replace(replace(detail, '{p}', p), '{missing}', ms),
+        |    '{meta}', meta), '{trimmed_bytes}', tb), '{trimmed_objects}', tn) AS detail
+        |FROM script, trimmed, anom ORDER BY step""".stripMargin,
 
     // Golden pin of the REST protocol script (routes, status codes
     // reference error ladder, global-id sharing, delete semantics).

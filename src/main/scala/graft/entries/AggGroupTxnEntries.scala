@@ -1878,22 +1878,7 @@ private[graft] object AggGroupTxnEntries {
 
     "ct_cache_trim" ->
       s"""${LogCte.replace("WITH log", "WITH RECURSIVE log")},$CacheTrimCte
-         |SELECT f.node_id, f.path, f.size_bytes,
-         |  CASE WHEN dc.path IS NOT NULL THEN 'deleted_companion'
-         |       WHEN c.rn IS NOT NULL AND c.rn <= l.wmax THEN
-         |         CASE WHEN c.is_exempt THEN 'skipped_exempt'
-         |              WHEN c.is_tmp THEN 'skipped_tmp'
-         |              WHEN c.is_comp THEN 'skipped_companion'
-         |              ELSE 'deleted_lru' END
-         |       ELSE 'kept' END AS action
-         |FROM files f
-         |LEFT JOIN cand c ON c.node_id = f.node_id AND c.path = f.path
-         |LEFT JOIN lastw l ON l.node_id = f.node_id
-         |LEFT JOIN (SELECT DISTINCT s.node_id, f2.path
-         |           FROM delsegs s JOIN files f2 ON f2.node_id = s.node_id
-         |             AND (f2.path = s.path || '.tx' OR f2.path = s.path || '.index')) dc
-         |  ON dc.node_id = f.node_id AND dc.path = f.path
-         |ORDER BY f.node_id, f.path""".stripMargin,
+         |SELECT * FROM trim_actions ORDER BY node_id, path""".stripMargin,
 
     "asm_runs" ->
       s"""${LogCte.replace("WITH log", "WITH RECURSIVE log")},$AsmCte

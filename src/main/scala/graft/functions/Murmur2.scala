@@ -91,8 +91,14 @@ case class Murmur2Hash(child: Expression) extends UnaryExpression {
 
 /** Session registration for graft SQL functions. */
 object GraftFunctions {
+  /** Registers every graft function once per session. Callers on a
+    * per-request path call this each time; re-registering would replace
+    * every function and log a warning for each. `runtime_constant` is
+    * registered last, so its presence means the whole set is there. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
+    if (reg.functionExists(
+        org.apache.spark.sql.catalyst.FunctionIdentifier("runtime_constant"))) return
     reg.createOrReplaceTempFunction(
       "murmur2", (args: Seq[Expression]) => Murmur2Hash(args.head), "built-in")
     reg.createOrReplaceTempFunction(
@@ -198,6 +204,11 @@ object GraftFunctions {
         arity("kafka_batch_recompress", args, 3, 3)
         KafkaBatchRecompress(args.head, args(1),
           litInt("kafka_batch_recompress", args(2)))
+      }, "built-in")
+    reg.createOrReplaceTempFunction(
+      "runtime_constant", (args: Seq[Expression]) => {
+        arity("runtime_constant", args, 1, 1)
+        RuntimeConstant(args.head)
       }, "built-in")
   }
 }

@@ -132,13 +132,20 @@ object RecordLog {
    * overwrites every record's `timestamp` with the broker clock at
    * append. `appendTs` is that clock — `current_timestamp()` in
    * production; correctness scenarios pass a deterministic stamp so the
-   * oracle can re-derive it. Pure column projection — no shuffle, stays
-   * inside whole-stage codegen on the produce path.
+   * oracle can re-derive it. It must be foldable. Pure column projection
+   * — no shuffle, stays inside whole-stage codegen on the produce path.
+   *
+   * The LogAppendTime clock is bound into generated code by reference
+   * (`runtime_constant`), so requests that differ only in their clock
+   * reuse one compiled plan. The stamp is therefore not constant-folded:
+   * a filter on the stamped `timestamp` runs per row.
    */
   def stampTimestamp(df: DataFrame, timestampType: String,
       producerTs: Column, appendTs: Column): DataFrame =
     timestampType match {
-      case "LogAppendTime" => df.withColumn("timestamp", appendTs)
+      case "LogAppendTime" =>
+        graft.functions.GraftFunctions.register(df.sparkSession)
+        df.withColumn("timestamp", call_function("runtime_constant", appendTs))
       case "CreateTime"    => df.withColumn("timestamp", producerTs)
       case other =>
         throw new IllegalArgumentException(s"unknown message.timestamp.type: $other")

@@ -50,8 +50,8 @@ object Produce {
    * append (`model/timestamp.h:30`): under LogAppendTime every record of
    * a micro-batch gets `appendClock()` — the broker clock sampled once
    * per batch, the reference's batch-level append stamp — as its
-   * `timestamp`; under CreateTime (default) records keep whatever the
-   * producer supplied.
+   * `timestamp`, through [[RecordLog.stampTimestamp]]; under CreateTime
+   * (default) records keep whatever the producer supplied.
    */
   def appendStream(
       spark: SparkSession,
@@ -81,7 +81,7 @@ object Produce {
         val hwm = state.toSeq.toDF("partition", "hwm")
         val stamped =
           if (timestampType == "LogAppendTime")
-            batch.withColumn("timestamp", appendClock())
+            RecordLog.stampTimestamp(batch, timestampType, col("timestamp"), appendClock())
           else batch
         RecordLog.appendBatch(stamped, hwm, partitionCol, arrivalCol)
           .write.mode("append").parquet(outPath)

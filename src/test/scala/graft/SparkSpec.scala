@@ -37,6 +37,16 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     try { untilMarker(); body; untilMarker() }
     finally sc.removeSparkListener(listener)
   }
+
+  /** Classes Spark's code generator compiled while `body` ran: the count
+    * delta of its compile-time histogram. A plan whose generated source is
+    * already in Spark's code cache compiles none. */
+  protected def compilesDuring(body: => Any): Long = {
+    val compiled = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = compiled.getCount
+    body
+    compiled.getCount - before
+  }
 }
 
 object SparkSpec {

@@ -50,4 +50,14 @@ class Murmur2Spec extends AnyFunSuite {
     assert(rows("foobar") === -790332482)
     assert(rows("x") === Murmur2.hash("x".getBytes("UTF-8")))
   }
+
+  test("register is once per session: a second call replaces no function") {
+    val spark = graft.SparkSpec.session
+    val reg = spark.sessionState.functionRegistry
+    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("murmur2")
+    GraftFunctions.register(spark)
+    val first = reg.lookupFunction(id).get
+    GraftFunctions.register(spark)
+    assert(reg.lookupFunction(id).get eq first)
+  }
 }

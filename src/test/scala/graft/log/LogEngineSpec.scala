@@ -122,6 +122,46 @@ class LogEngineSpec extends SparkSpec {
     }
   }
 
+  test("LogAppendTime produce requests that differ only in their clock compile once") {
+    import graft.functions.RecordBatchCodec
+    import graft.functions.RecordBatchCodec.Rec
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val topic = java.nio.file.Files.createTempDirectory("lat_compiles").toString
+    val wireSchema = StructType(Seq(StructField("partition", IntegerType),
+      StructField("arrival", LongType), StructField("wire", BinaryType)))
+    val clocks = Seq(1717200000000L, 1717200001000L, 1717200002000L)
+    // one produce request per clock: two partitions, one 3-record batch each
+    val compiles = clocks.zipWithIndex.map { case (ts, req) =>
+      val rows = (0 until 2).map { p =>
+        val recs = (0 until 3).map(i => Rec(i, 0L, s"k$p-$i".getBytes("UTF-8"),
+          s"r$req".getBytes("UTF-8"), Nil))
+        Row(p, req.toLong, RecordBatchCodec.encode(0L, 0, 0.toShort, 0L, 0L, -1L,
+          0.toShort, 0, recs, codec = 0))
+      }
+      val hwm = typedLit((0 until 2).map(p => p -> 3L * req).toMap)
+      compilesDuring {
+        val batches = spark.createDataFrame(java.util.Arrays.asList(rows: _*), wireSchema)
+        val ingested = RecordLog.wireIngest(batches, col("wire"), col("partition"), col("arrival"))
+        RecordLog.stampTimestamp(ingested.where(col("route") === "accept"),
+            "LogAppendTime", lit(null), lit(ts))
+          .select(col("partition"),
+            (col("offset") + element_at(hwm, col("partition"))).as("offset"),
+            col("timestamp"), col("key"), col("value"))
+          .write.format("graftlog").mode("append").option("path", topic).save()
+      }
+    }
+    assert(compiles.tail === Seq(0L, 0L), s"classes compiled per request: $compiles")
+    val back = spark.read.format("graftlog").option("path", topic).load()
+      .select(col("partition"), col("offset"), col("timestamp"), col("value").cast("string"))
+      .as[(Int, Long, Long, String)].collect()
+    assert(back.length === 18)
+    assert(back.map(r => (r._3, r._4)).toSet ===
+      clocks.zipWithIndex.map { case (ts, req) => (ts, s"r$req") }.toSet)
+    assert(back.groupBy(_._1).view.mapValues(_.map(_._2).sorted.toSeq).toMap ===
+      Map(0 -> (0L until 9L), 1 -> (0L until 9L)))
+  }
+
   test("fetch honors offset lower bound and max rows") {
     val got = RecordLog.fetch(mkLog(), 0, 1, 2).select("offset").as[Long].collect()
     assert(got.toSeq === Seq(1L, 2L))
